@@ -1,23 +1,29 @@
 package graft.core
 
+import java.io.FileNotFoundException
+
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** O13 — the reference's idempotent insert (check-then-insert at
-  * /root/reference/airflow/dags/weather_etl.py:156–187) re-expressed as set
-  * semantics.
+  * weather_etl.py:156–187) re-expressed as set semantics.
   *
   * The reference's guarantee: after any number of replays, the landed table
   * has at most one row per (city, utc) (:158–168, skip at :186–187). Its
   * mechanism is racy (no transaction spans the SELECT at :158 and the INSERT
   * at :170); ours is a single atomic batch append of `new ∖ existing`.
   *
-  * Scale: the anti-join shuffles both sides on (city, utc) — at 100 TB the
-  * existing side must be pruned first (partition the landed table by
-  * date(utc) so only the incoming batch's date range is scanned) and the
-  * incoming batch (tiny: 1 row/2 min in the reference) broadcasts, making
-  * the "shuffle" a broadcast-anti-join with zero movement of the big side.
+  * Scale: the existing side is read as its two key columns only, a small
+  * build side the anti-join broadcasts, so the landed table is never
+  * shuffled. The flat layout anti-joins those key columns directly: a date
+  * IN list over a string cast of `utc` is not a filter parquet can push
+  * down, so on a flat directory it would prune no IO. Date pruning lives in
+  * the partitioned layout ([[graft.sinks.LandedTable]]), where the batch's
+  * dates select whole `utc_date` partitions.
   * [[graft.streaming.WeatherStream]] is the bounded-state streaming variant.
   */
 object WeatherDedup {
@@ -44,20 +50,19 @@ object WeatherDedup {
   /** `batch ∖ existing` on the logical key — left_anti join, the exact
     * semantics of the reference's COUNT(*)==0 gate (weather_etl.py:158–168).
     * For a left_anti hash join Spark builds (and may broadcast) the right
-    * side, so the big landed table must be shrunk BEFORE this join — see
-    * [[idempotentAppend]]'s date pruning. */
+    * side, so the existing side should be only the key columns — see
+    * [[appendImpl]]. */
   def newRowsOnly(batch: DataFrame, existing: DataFrame): DataFrame =
     batch.join(existing.select(WeatherSchema.key.map(col): _*),
       WeatherSchema.key, "left_anti")
 
-  /** Idempotent append to a parquet table path. Returns rows actually
-    * appended.
+  /** Idempotent append to a parquet table path (flat layout). Returns rows
+    * actually appended.
     *
-    * Scale shape: the existing side is reduced to key columns (column
-    * pruning) AND to the batch's own utc-date range (partition pruning when
-    * the table is laid out by date(utc)); the incoming micro-batch is tiny
-    * (1 row / 2 min in the reference), so what remains is a small build side
-    * the anti-join can broadcast — no shuffle of the landed table, ever. */
+    * Scale shape: the existing side is read as key columns only, with the
+    * batch's own key schema (no footer-inference job), and anti-joined as
+    * is. The batch is evaluated once — the fetch behind it runs once per
+    * landing. */
   def idempotentAppend(spark: SparkSession, batch: DataFrame,
                        tablePath: String): Long =
     appendImpl(spark, dedupWithinBatch(batch), tablePath,
@@ -67,7 +72,9 @@ object WeatherDedup {
     * ([[graft.sinks.LandedTable]]) layouts. `batch` is already
     * in-batch-deduped; when `partitionCol` is set the batch must carry that
     * date column, the existing-side read prunes to the batch's dates through
-    * it, and the write partitions by it. */
+    * it, and the write partitions by it. Either way the batch is evaluated
+    * exactly once: the partitioned date list comes from a cache the
+    * anti-join then reads. */
   private[graft] def appendImpl(spark: SparkSession, rawBatch: DataFrame,
                                 tablePath: String,
                                 partitionCol: Option[String]): Long = {
@@ -77,35 +84,47 @@ object WeatherDedup {
     // could never land one (its transform crashes first, weather_etl.py:125).
     val batch = rawBatch.filter(
       WeatherSchema.key.map(col(_).isNotNull).reduce(_ && _))
-    val dateCol = partitionCol.map(col).getOrElse(to_date(col("utc")))
-    val fresh =
-      if (tableExists(spark, tablePath)) {
-        // Bounded driver-side collect: micro-batches span few distinct dates.
-        // Null dates (permissive-mode rows with no utc) can never equal an
-        // existing key, so they skip the prune list rather than NPE it.
-        val dates = batch.select(dateCol.as("d")).filter(col("d").isNotNull)
-          .distinct().collect().map(_.getDate(0).toString)
-        val existingKeys = spark.read.parquet(tablePath)
-          .filter(dateCol.cast("string").isin(dates: _*))
-          .select(WeatherSchema.key.map(col): _*)
-        batch.join(existingKeys, WeatherSchema.key, "left_anti")
-      } else batch
-    // One shot: count+write from a cached plan so the append is consistent
-    // with the reported count even if the source is re-evaluated.
-    val materialized = fresh.cache()
+    val cached = ArrayBuffer.empty[DataFrame]
+    def cache(df: DataFrame): DataFrame = { cached += df; df.cache() }
     try {
+      val fresh =
+        if (!tableExists(spark, tablePath)) batch
+        else {
+          val keyCols = WeatherSchema.key ++ partitionCol
+          val existing = spark.read
+            .schema(StructType(keyCols.map(batch.schema(_))))
+            .parquet(tablePath)
+          partitionCol match {
+            case None => newRowsOnly(batch, existing)
+            case Some(c) =>
+              // Bounded driver-side collect: micro-batches span few distinct
+              // dates, and a non-null utc gives a non-null date.
+              val staged = cache(batch)
+              val dates = staged.select(c).distinct().collect().map(_.getDate(0))
+              newRowsOnly(staged, existing.filter(col(c).isin(dates: _*)))
+          }
+        }
+      // One shot: count+write from a cached plan so the append is consistent
+      // with the reported count even if the source is re-evaluated.
+      val materialized = cache(fresh)
       val n = materialized.count()
       if (n > 0) {
         val w = materialized.write.mode(SaveMode.Append)
         partitionCol.fold(w)(c => w.partitionBy(c)).parquet(tablePath)
       }
       n
-    } finally materialized.unpersist()
+    } finally cached.reverseIterator.foreach(_.unpersist())
   }
 
+  /** True when `path` holds at least one entry that is not Spark or Hadoop
+    * bookkeeping: a directory with only `_SUCCESS`, a crashed write's
+    * `_temporary` or `.crc` files holds no table yet. */
   private[graft] def tableExists(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).nonEmpty
+    try fs.listStatus(p).exists { st =>
+      val name = st.getPath.getName
+      !name.startsWith("_") && !name.startsWith(".")
+    } catch { case _: FileNotFoundException => false }
   }
 }

@@ -75,13 +75,15 @@ object RestWeatherSource {
     * executor partition runs its own fetcher over its slice of the city
     * list (`mapPartitions`, so a transport/connection pool initializes once
     * per partition, not per city). Same [[Fetcher]] seam as the 1-doc path.
-    * `parallelism` bounds concurrent outbound connections cluster-wide. */
+    * `parallelism` bounds concurrent outbound connections cluster-wide. The
+    * city list is sliced straight into `parallelism` partitions, so the
+    * fetch runs in the first stage with no shuffle in front of it. */
   def loadMany(spark: SparkSession, cities: Seq[String],
                base: Config, fetcher: Fetcher = new HttpFetcher(),
                parallelism: Int = 8): DataFrame = {
     import spark.implicits._
     val nParts = math.min(parallelism, math.max(1, cities.size))
-    spark.createDataset(cities).repartition(nParts)
+    spark.sparkContext.parallelize(cities, nParts)
       .mapPartitions { cityIt =>
         // real impl: one pooled HTTP client per partition, opened here
         cityIt.map(city => fetcher.fetch(base.copy(city = city).url))

@@ -66,4 +66,19 @@ class WeatherDedupSpec extends SparkSpec {
       SCTest.Parameters.default.withMinSuccessfulTests(12), prop)
     assert(result.passed, result.status.toString)
   }
+
+  test("a directory holding only _SUCCESS or a crashed write's _temporary is no table yet") {
+    val path = tmpDir("weather-leftovers")
+    val dir = new java.io.File(path)
+    assert(!WeatherDedup.tableExists(spark, s"$path/missing"))
+    assert(!WeatherDedup.tableExists(spark, path))
+    new java.io.File(dir, "_SUCCESS").createNewFile()
+    new java.io.File(dir, "_temporary/0").mkdirs()
+    new java.io.File(dir, ".hidden.crc").createNewFile()
+    assert(!WeatherDedup.tableExists(spark, path))
+    assert(WeatherDedup.idempotentAppend(spark, landed(WeatherFixtures.all), path) == 3)
+    assert(WeatherDedup.tableExists(spark, path))
+    assert(WeatherDedup.idempotentAppend(spark, landed(WeatherFixtures.all), path) == 0)
+    assert(spark.read.parquet(path).count() == 3)
+  }
 }
