@@ -1,7 +1,8 @@
 package graft.sinks
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, NumericType, StringType}
+import org.apache.spark.sql.types.{BinaryType, DataType, IntegerType, LongType,
+  NumericType, StringType, StructType}
 
 import graft.analytics.Parity
 import graft.sources.Tables
@@ -309,18 +310,24 @@ class VersionedTableOps(protected val io: TableIO) {
     m ++ s
   }
 
-  /** RAW carry of the head's bulk manifest content — existing `#seg=`
-    * pointers verbatim plus inline data-file lines, folding per the
-    * table's thresholds. Sound exactly when the new snapshot keeps EVERY
-    * head data file (appends, merge-on-read deletes); a rewrite that
-    * drops or replaces files must build its list inline instead. */
-  private def carryManifest(dir: String, h: Option[Int]): Seq[String] =
-    h.toSeq.flatMap { hv =>
-      val raw = io.readLines(manifestPath(dir, hv))
+  /** RAW carry of the head's manifest from ONE read of it: the
+    * `#schema=` header settled by [[schemaHeader]] against `added` (the
+    * physical schemas of the data files the publish lands), the head's
+    * row-erasure lines (`#del=`, `#eqdel=` — they reference the carried
+    * files), then its bulk content — existing `#seg=` pointers verbatim
+    * plus inline data-file lines, folding per the table's thresholds.
+    * Sound exactly when the new snapshot keeps EVERY head data file
+    * (appends, merge-on-read deletes); a rewrite that drops or replaces
+    * files must build its list inline instead. */
+  private def carryManifest(dir: String, h: Option[Int],
+                            added: Seq[StructType]): Seq[String] = {
+    val raw = h.toSeq.flatMap(rawManifest(dir, _))
+    schemaHeader(raw, added, replacesAll = false) ++
+      raw.filter(l => l.startsWith("#del=") || l.startsWith("#eqdel=")) ++
       foldCarry(dir,
         raw.filter(segRef),
         raw.filter(l => l.nonEmpty && !l.startsWith("#")))
-    }
+  }
 
   /** RAW carry of the head's sidecar (pointers + inline payload, folded).
     * Same soundness condition as [[carryManifest]]: nothing removed. */
@@ -353,29 +360,30 @@ class VersionedTableOps(protected val io: TableIO) {
     * [[SnapshotShapeConflict]]; the caller's bounded OCC retry recomputes
     * against the new head. Delete-vector members of `removed` are
     * validated separately by each caller's dels-unchanged check (they
-    * live on `#del=` lines this carry never touches). */
+    * live on `#del=` lines this carry never touches). The `#schema=`
+    * header is settled as in [[carryManifest]]; a rewrite that keeps no
+    * head file takes the schema of what it lands. */
   private def carryManifestExcept(dir: String, h: Option[Int],
-                                  removed: Set[String],
-                                  mustExist: Set[String]): Seq[String] = {
+      removed: Set[String], mustExist: Set[String],
+      added: Seq[StructType]): Seq[String] = {
     val found = scala.collection.mutable.Set.empty[String]
-    val lines = h.toSeq.flatMap { hv =>
-      io.readLines(manifestPath(dir, hv)).flatMap { l =>
-        if (segRef(l)) {
-          val payload = readSegment(segPath(l))
-          if (!payload.exists(removed)) Seq(l)
+    val raw = h.toSeq.flatMap(rawManifest(dir, _))
+    val lines = raw.flatMap { l =>
+      if (segRef(l)) {
+        val payload = readSegment(segPath(l))
+        if (!payload.exists(removed)) Seq(l)
+        else {
+          val (hit, kept) = payload.partition(removed)
+          found ++= hit
+          if (kept.isEmpty) Seq.empty
           else {
-            val (hit, kept) = payload.partition(removed)
-            found ++= hit
-            if (kept.isEmpty) Seq.empty
-            else {
-              val suffix = l.drop(SegPrefix.length).dropWhile(_ != '\t')
-              Seq(SegPrefix + writeSegment(dir, kept) + suffix)
-            }
+            val suffix = l.drop(SegPrefix.length).dropWhile(_ != '\t')
+            Seq(SegPrefix + writeSegment(dir, kept) + suffix)
           }
-        } else if (l.nonEmpty && !l.startsWith("#")) {
-          if (removed(l)) { found += l; Seq.empty } else Seq(l)
-        } else Seq.empty
-      }
+        }
+      } else if (l.nonEmpty && !l.startsWith("#")) {
+        if (removed(l)) { found += l; Seq.empty } else Seq(l)
+      } else Seq.empty
     }
     val missing = mustExist -- found
     if (missing.nonEmpty)
@@ -383,7 +391,7 @@ class VersionedTableOps(protected val io: TableIO) {
         s"${missing.size} file(s) of this rewrite's set are no longer " +
           "in the head (a concurrent rewrite landed them); re-run " +
           "against the new head")
-    lines
+    schemaHeader(raw, added, replacesAll = lines.isEmpty) ++ lines
   }
 
   /** Sidecar twin of [[carryManifestExcept]]: stats lines keyed by a
@@ -591,17 +599,98 @@ class VersionedTableOps(protected val io: TableIO) {
   // private[sinks]: specs pin per-version file sets (e.g. "the
   // incremental ANALYZE scanned exactly the files this window landed").
   private[sinks] def filesOf(dir: String, version: Int): Seq[String] =
-    manifestLines(dir, version)
-      .filter(_.nonEmpty).filterNot(_.startsWith("#"))
+    filesIn(rawManifest(dir, version))
+
+  /** A version's manifest exactly as stored: headers, segment pointers
+    * and inline paths. The `…In(raw)` parsers below work on these lines,
+    * so a read that needs the file list, the delete state and the
+    * physical schema opens the manifest once. */
+  private def rawManifest(dir: String, version: Int): Seq[String] =
+    io.readLines(manifestPath(dir, version))
+
+  private def filesIn(raw: Seq[String]): Seq[String] =
+    expandSegs(raw).filter(l => l.nonEmpty && !l.startsWith("#"))
+
+  private def delsIn(raw: Seq[String]): Seq[String] =
+    raw.collect { case l if l.startsWith("#del=") => l.drop(5) }
+
+  private def eqDelsIn(raw: Seq[String]): Seq[(Int, String, String)] =
+    raw.collect {
+      case l if l.startsWith("#eqdel=") =>
+        val Array(s, c, p) = l.drop(7).split('\t')
+        (s.toInt, c, p)
+    }
+
+  // ── Physical schema header ────────────────────────────────────────────
+  // `#schema=<StructType json>`: the physical schema of EVERY live data
+  // file of the version, nullability relaxed the way every parquet read
+  // serves it. It is what Delta and Iceberg keep in the table log, so a
+  // reader never samples a footer (one Spark job per inference) to learn
+  // the table's shape. Invariant: header present ⇒ every live file's
+  // footer carries exactly this schema. A publish keeps it by induction
+  // ([[schemaHeader]]): the head carried the same header and the publish
+  // lands files of that schema (or none), or the publish replaces every
+  // file. A batch of any other schema (an evolving append, a re-typed
+  // column) publishes NO header and the table reads by inference exactly
+  // as before — as do tables written before the header existed.
+  private val SchemaPrefix = "#schema="
+
+  private def schemaIn(raw: Seq[String]): Option[StructType] =
+    raw.collectFirst {
+      case l if l.startsWith(SchemaPrefix) =>
+        DataType.fromJson(l.drop(SchemaPrefix.length)).asInstanceOf[StructType]
+    }
+
+  /** The physical schema a batch written from `df` carries in its
+    * footers, as a parquet read serves it. */
+  private def physOf(df: DataFrame): StructType = relaxed(df.schema)
+
+  /** The `#schema=` header line of a publish built on a head whose raw
+    * manifest is `headRaw` (empty = no head). `added` holds the physical
+    * schemas of the data files the publish lands (empty = none);
+    * `replacesAll` is true when no head data file stays live. The header
+    * survives only while every live file is known to match it. */
+  private def schemaHeader(headRaw: Seq[String],
+                           added: Seq[StructType],
+                           replacesAll: Boolean): Seq[String] = {
+    val noHeadFiles = replacesAll ||
+      !headRaw.exists(l => segRef(l) || (l.nonEmpty && !l.startsWith("#")))
+    val s =
+      if (noHeadFiles) added.distinct match {
+        case Seq(one) => Some(one)
+        case _ => None
+      }
+      else schemaIn(headRaw).filter(h => added.forall(_ == h))
+    s.map(SchemaPrefix + _.json).toSeq
+  }
+
+  /** The schema every engine read of version `raw` pins: the declared
+    * physical schema ([[declPhysOf]]), else the version's `#schema=`
+    * header. None only for an undeclared table written without the
+    * header — its reads infer from a footer, as they always did. */
+  private def physSchemaOf(dir: String, raw: Seq[String]): Option[StructType] =
+    declPhysOf(dir).orElse(schemaIn(raw))
+
+  /** Scan of `files` under `pin` — the one place an engine read falls
+    * back to footer inference (no pin). */
+  private def scan(spark: SparkSession, files: Seq[String],
+                   pin: Option[StructType]): DataFrame =
+    pin.fold(spark.read.parquet(files: _*))(
+      spark.read.schema(_).parquet(files: _*))
+
+  /** The one schema positional delete vectors are written with
+    * ([[deleteWhere]], [[updateWhere]], consolidation): their reads pin
+    * it instead of inferring it from a footer. */
+  private val DelVectorSchema = StructType.fromDDL("file_path STRING, pos LONG")
+
+  private def readDelVectors(spark: SparkSession,
+                             dels: Seq[String]): DataFrame =
+    spark.read.schema(DelVectorSchema).parquet(dels: _*)
 
   /** Positional delete files (`#del=` manifest lines) of a version —
     * merge-on-read row deletes; see [[deleteWhere]]. */
   private[sinks] def delFilesOf(dir: String, version: Int): Seq[String] =
-    io.readLines(manifestPath(dir, version))
-      .collect { case l if l.startsWith("#del=") => l.drop(5) }
-
-  private def delLinesOf(dir: String, version: Option[Int]): Seq[String] =
-    version.toSeq.flatMap(v => delFilesOf(dir, v).map(f => s"#del=$f"))
+    delsIn(rawManifest(dir, version))
 
   /** Equality-delete entries of a version (`#eqdel=<seq>\t<col>\t<path>`
     * manifest lines): merge-on-read delete-by-key; see [[deleteByKeys]].
@@ -610,16 +699,7 @@ class VersionedTableOps(protected val io: TableIO) {
     * semantics: a key re-inserted AFTER the delete survives). */
   private[sinks] def eqDelsOf(dir: String,
                               version: Int): Seq[(Int, String, String)] =
-    io.readLines(manifestPath(dir, version)).collect {
-      case l if l.startsWith("#eqdel=") =>
-        val Array(s, c, p) = l.drop(7).split('\t')
-        (s.toInt, c, p)
-    }
-
-  private def eqDelLinesOf(dir: String, version: Option[Int]): Seq[String] =
-    version.toSeq.flatMap(v => eqDelsOf(dir, v).map {
-      case (s, c, p) => s"#eqdel=$s\t$c\t$p"
-    })
+    eqDelsIn(rawManifest(dir, version))
 
   /** First retained version listing each of `files` — the applicability
     * boundary for equality deletes (a file is subject to a delete iff it
@@ -1294,9 +1374,10 @@ class VersionedTableOps(protected val io: TableIO) {
   def commit(df: DataFrame, dir: String, append: Boolean = true,
              txnId: Option[String] = None): Int = {
     val pt = partitioningOf(dir)
-    val newFiles =
-      if (pt.isEmpty) writeBatch(df, dir)
-      else writeBatch(PartitionTransform.clusterFor(df, pt, ptNumFiles(dir)), dir)
+    val written =
+      if (pt.isEmpty) df else PartitionTransform.clusterFor(df, pt, ptNumFiles(dir))
+    val newFiles = writeBatch(written, dir)
+    val phys = physOf(written)
     validateConstraints(df.sparkSession, dir, newFiles, userBatch = true)
     // per-file row counts land with EVERY commit (footers of the batch
     // just written — O(batch), local), and the head's stats lines carry
@@ -1306,7 +1387,8 @@ class VersionedTableOps(protected val io: TableIO) {
     val rowsNew =
       if (pt.isEmpty) rowsLines(df.sparkSession, newFiles)
       else statsLines(df.sparkSession, dir, newFiles,
-        pt.flatMap(_.statNames).distinct, cbo = cboOnCommit(dir))
+        pt.flatMap(_.statNames).distinct, cbo = cboOnCommit(dir),
+        known = Some(phys))
     val meta = txnId.map(t => s"#txn=$t").toSeq :+ s"#ts=${now()}"
     // an append inherits the head's delete vectors (they reference the
     // carried files); a logical overwrite starts clean — none of its files
@@ -1323,8 +1405,7 @@ class VersionedTableOps(protected val io: TableIO) {
       var headAt: Option[Int] = None
       publishOnHeadTxn(dir, txnId, guardFiles = newFiles) { h =>
         headAt = h
-        meta ++ delLinesOf(dir, h) ++ eqDelLinesOf(dir, h) ++
-          carryManifest(dir, h) ++ newSeg
+        meta ++ carryManifest(dir, h, Seq(phys)) ++ newSeg
       } match {
         case Left(existing) =>
           // a LIVE same-txn writer won the race: this batch never
@@ -1350,8 +1431,9 @@ class VersionedTableOps(protected val io: TableIO) {
     } else {
       // a logical overwrite's lines don't derive from the head, but a
       // txn-carrying one still rides the same exactly-once arbiter
-      publishOnHeadTxn(dir, txnId,
-        guardFiles = newFiles)(_ => meta ++ newFiles) match {
+      publishOnHeadTxn(dir, txnId, guardFiles = newFiles)(_ =>
+        meta ++ schemaHeader(Seq.empty, Seq(phys), replacesAll = true) ++
+          newFiles) match {
         case Left(existing) =>
           discardUnpublishedBatch(newFiles)
           existing
@@ -1402,7 +1484,8 @@ class VersionedTableOps(protected val io: TableIO) {
     require(vs.nonEmpty, s"no committed version at $dir")
     val v = version.getOrElse(vs.last)
     require(vs.contains(v), s"version $v not in $vs")
-    readLive(spark, dir, v, filesOf(dir, v))
+    val raw = rawManifest(dir, v)
+    readLive(spark, dir, raw, filesIn(raw))
   }
 
   /** `file:` URIs (as `_metadata.file_path` reports them) normalized to the
@@ -1412,8 +1495,9 @@ class VersionedTableOps(protected val io: TableIO) {
     col("_metadata.file_path"), "^file:/*", "/")
 
   /** Nullability-relaxed declared PHYSICAL schema, when the table has a
-    * declaration — the schema pin every engine-internal read of a
-    * possibly-mixed-vintage file set must use: schema inference samples
+    * declaration — the first choice of [[physSchemaOf]], ahead of the
+    * manifest's `#schema=` header, and the pin every engine-internal read
+    * of a possibly-mixed-vintage file set must use: schema inference samples
     * ONE footer, so on a file set straddling a schema evolution the
     * sample may predate it and a later-added column would silently
     * VANISH from the read (and, through a rewrite, from the rewritten
@@ -1423,8 +1507,14 @@ class VersionedTableOps(protected val io: TableIO) {
     * files and the vectorized reader refuses a missing REQUIRED column;
     * dropped columns project away (a rewrite sheds retired bytes — the
     * ledger keeps re-adds safe regardless). */
-  private[graft] def declPhysOf(dir: String)
-      : Option[org.apache.spark.sql.types.StructType] = {
+  private[graft] def declPhysOf(dir: String): Option[StructType] =
+    declaredSchema(dir)
+      .map(j => DataType.fromJson(j).asInstanceOf[StructType])
+      .map(s => relaxed(graft.sql.ColumnMapping.physicalSchema(s)))
+
+  /** `s` with every field, array element and map value nullable — the
+    * shape a parquet read serves whatever the footer claims. */
+  private def relaxed(s: StructType): StructType = {
     import org.apache.spark.sql.types._
     def relax(dt: DataType): DataType = dt match {
       case s: StructType => StructType(s.fields.map(f =>
@@ -1435,10 +1525,7 @@ class VersionedTableOps(protected val io: TableIO) {
         m.copy(valueType = relax(m.valueType), valueContainsNull = true)
       case o => o
     }
-    declaredSchema(dir)
-      .map(j => DataType.fromJson(j).asInstanceOf[StructType])
-      .map(s => relax(graft.sql.ColumnMapping.physicalSchema(s))
-        .asInstanceOf[StructType])
+    relax(s).asInstanceOf[StructType]
   }
 
   /** The raw scan of `files` tagged with (file, position) identity columns
@@ -1448,12 +1535,8 @@ class VersionedTableOps(protected val io: TableIO) {
     * files are immutable. */
   private def taggedLive(spark: SparkSession, files: Seq[String],
                          dels: Seq[String],
-                         pin: Option[org.apache.spark.sql.types.StructType]
-                           = None): DataFrame = {
-    val raw = pin match {
-      case Some(sc) => spark.read.schema(sc).parquet(files: _*)
-      case None => spark.read.parquet(files: _*)
-    }
+                         pin: Option[StructType]): DataFrame = {
+    val raw = scan(spark, files, pin)
     val tagged = raw.select(
       (Seq(plainPath.as("__graft_file"),
         col("_metadata.row_index").as("__graft_pos")) ++
@@ -1463,7 +1546,7 @@ class VersionedTableOps(protected val io: TableIO) {
       // the delete side is the small side by construction (positions of
       // deleted rows, consolidated by compaction) — AQE broadcasts it;
       // the data side never shuffles
-      val dd = spark.read.parquet(dels: _*)
+      val dd = readDelVectors(spark, dels)
       tagged.join(dd,
         tagged("__graft_file") === dd("file_path") &&
           tagged("__graft_pos") === dd("pos"),
@@ -1473,12 +1556,8 @@ class VersionedTableOps(protected val io: TableIO) {
 
   private def readFiles(spark: SparkSession, files: Seq[String],
                         dels: Seq[String],
-                        pin: Option[org.apache.spark.sql.types.StructType]
-                          = None): DataFrame =
-    if (dels.isEmpty) pin match {
-      case Some(sc) => spark.read.schema(sc).parquet(files: _*)
-      case None => spark.read.parquet(files: _*)
-    }
+                        pin: Option[StructType]): DataFrame =
+    if (dels.isEmpty) scan(spark, files, pin)
     else taggedLive(spark, files, dels, pin)
       .drop("__graft_file", "__graft_pos")
 
@@ -1492,12 +1571,14 @@ class VersionedTableOps(protected val io: TableIO) {
     * materializes them away — read cost grows with eras only between
     * maintenance passes. Null-key semantics: a null in the delete file
     * erases null-key rows (null-safe equality), matching the delete-by-key
-    * contract rather than SQL join semantics. */
-  private def readLive(spark: SparkSession, dir: String, version: Int,
+    * contract rather than SQL join semantics. `raw` is the version's
+    * manifest ([[rawManifest]]): deletes and the schema pin
+    * ([[physSchemaOf]]) come from it without another read. */
+  private def readLive(spark: SparkSession, dir: String, raw: Seq[String],
                        files: Seq[String]): DataFrame = {
-    val pin = declPhysOf(dir)
-    val dels = delFilesOf(dir, version)
-    val eqs = eqDelsOf(dir, version)
+    val pin = physSchemaOf(dir, raw)
+    val dels = delsIn(raw)
+    val eqs = eqDelsIn(raw)
     if (eqs.isEmpty || files.isEmpty) readFiles(spark, files, dels, pin)
     else {
       val added = addedAtOf(dir, files)
@@ -1548,12 +1629,12 @@ class VersionedTableOps(protected val io: TableIO) {
     val vs = versions(dir)
     require(vs.nonEmpty, s"no committed version at $dir")
     val head = vs.last
+    val raw = rawManifest(dir, head)
     // predicates evaluate over SERVED values (nested existence defaults
     // substituted) so DELETE WHERE and SELECT WHERE agree on the same
     // rows; the position computation is unaffected by the substitution
     val matched = substDefaults(dir,
-        taggedLive(spark, filesOf(dir, head),
-          delFilesOf(dir, head), declPhysOf(dir)))
+        taggedLive(spark, filesIn(raw), delsIn(raw), physSchemaOf(dir, raw)))
       .filter(predicate)
       .select(col("__graft_file").as("file_path"),
         col("__graft_pos").as("pos"))
@@ -1590,8 +1671,8 @@ class VersionedTableOps(protected val io: TableIO) {
             s"the head (concurrent compaction/overwrite rewrote them); " +
             s"re-run deleteWhere against the new head")
       headAt = h
-      Seq(s"#ts=${now()}") ++ delLinesOf(dir, h) ++ eqDelLinesOf(dir, h) ++
-        newDel.map(f => s"#del=$f") ++ carryManifest(dir, h)
+      Seq(s"#ts=${now()}") ++ carryManifest(dir, h, Seq.empty) ++
+        newDel.map(f => s"#del=$f")
     }
     // delete vectors never move min/max (stats stay a superset guarantee);
     // the new vector's own row count lands so fastCount can subtract the
@@ -1644,20 +1725,21 @@ class VersionedTableOps(protected val io: TableIO) {
     val vs = versions(dir)
     require(vs.nonEmpty, s"no committed version at $dir")
     val head = vs.last
-    require(eqDelsOf(dir, head).isEmpty,
+    val raw = rawManifest(dir, head)
+    require(eqDelsIn(raw).isEmpty,
       s"$dir carries unmaterialized equality deletes; compact() before " +
         "updateWhere (their seq scoping does not order against the " +
         "update's appended rows)")
-    val files = filesOf(dir, head)
+    val files = filesIn(raw)
     if (files.isEmpty) return head
-    val headDels = delFilesOf(dir, head)
+    val headDels = delsIn(raw)
     // matched rows serve BOTH halves (positions out, updated copies out):
     // one scan, cached for the second pass
     // served-value semantics for both the predicate AND the assignment
     // expressions (an UPDATE reading main.rh sees the default, like any
     // SELECT); rewritten rows then MATERIALIZE the substituted values
     val matched = substDefaults(dir,
-        taggedLive(spark, files, headDels, declPhysOf(dir)))
+        taggedLive(spark, files, headDels, physSchemaOf(dir, raw)))
       .filter(predicate).persist()
     try {
       val dataCols = matched.columns.drop(2).toSeq // after (file, pos) tags
@@ -1680,15 +1762,17 @@ class VersionedTableOps(protected val io: TableIO) {
       val updated = matched.select(dataCols.map(c =>
         assignments.get(c).map(_.as(c)).getOrElse(col(c))): _*)
       val pt = partitioningOf(dir)
-      val newFiles =
-        if (pt.isEmpty) writeBatch(updated, dir)
-        else writeBatch(
-          PartitionTransform.clusterFor(updated, pt, ptNumFiles(dir)), dir)
+      val written =
+        if (pt.isEmpty) updated
+        else PartitionTransform.clusterFor(updated, pt, ptNumFiles(dir))
+      val newFiles = writeBatch(written, dir)
+      val phys = physOf(written)
       validateConstraints(spark, dir, newFiles)
       val rowsNew =
         if (pt.isEmpty) rowsLines(spark, newFiles)
         else statsLines(spark, dir, newFiles,
-          pt.flatMap(_.statNames).distinct, cbo = cboOnCommit(dir))
+          pt.flatMap(_.statNames).distinct, cbo = cboOnCommit(dir),
+          known = Some(phys))
       val referenced =
         obs.get("files").asInstanceOf[scala.collection.Seq[String]].toSet
       // merge-on-read update: all head files carry, plus the updated
@@ -1713,8 +1797,8 @@ class VersionedTableOps(protected val io: TableIO) {
               "delete); re-running against the new head so updated copies " +
               "cannot resurrect concurrently-deleted rows")
         headAt = h
-        Seq(s"#ts=${now()}") ++ delLinesOf(dir, h) ++
-          newDel.map(f => s"#del=$f") ++ carryManifest(dir, h) ++ newSeg
+        Seq(s"#ts=${now()}") ++ carryManifest(dir, h, Seq(phys)) ++
+          newDel.map(f => s"#del=$f") ++ newSeg
       }
       val hdr = headerOrUpgrade(dir, headAt).map { case (d, del) =>
         rowsHeaderLine(d + sumRows(rowsNew), del + sumRows(delRowLines))
@@ -1774,8 +1858,8 @@ class VersionedTableOps(protected val io: TableIO) {
       // the head's files (all added at ≤ head < seq), never to later
       // appends — re-resolved per OCC retry like every head derivation
       val seq = h.getOrElse(0) + 1
-      Seq(s"#ts=${now()}") ++ delLinesOf(dir, h) ++ eqDelLinesOf(dir, h) ++
-        out.map(f => s"#eqdel=$seq\t$keyCol\t$f") ++ carryManifest(dir, h)
+      Seq(s"#ts=${now()}") ++ carryManifest(dir, h, Seq.empty) ++
+        out.map(f => s"#eqdel=$seq\t$keyCol\t$f")
     }
     // key erasure never moves a file's min/max: superset guarantee holds;
     // the totals carry unchanged — equality deletes are data-dependent
@@ -1808,9 +1892,7 @@ class VersionedTableOps(protected val io: TableIO) {
     * vectors too: the rolled-back STATE includes which rows were dead. */
   def rollback(dir: String, toVersion: Int): Int = {
     val v = publish(dir, versions(dir).last + 1,
-      s"#ts=${now()}" +: (delLinesOf(dir, Some(toVersion)) ++
-        eqDelLinesOf(dir, Some(toVersion)) ++
-        carryManifest(dir, Some(toVersion))))
+      s"#ts=${now()}" +: carryManifest(dir, Some(toVersion), Seq.empty))
     // the restored state's sidecar (stats bounds, blooms, row counts)
     // describes the same immutable files — copy it (pointers and all:
     // segments are immutable and GC-pinned by this new reference) so a
@@ -1860,16 +1942,19 @@ class VersionedTableOps(protected val io: TableIO) {
       .flatMap(v => tsOf(dir, v).map(t => (v, t)))
       .filter(_._2 >= tsMillis).map(_._1).minOption
 
-  /** (resolved version, live data files, has delete debt) — the seam the
-    * SQL catalog plans a snapshot read through. */
-  private[graft] def snapshotInfo(dir: String,
-      version: Option[Int]): (Int, Seq[String], Boolean) = {
+  /** (resolved version, live data files, has delete debt, `#schema=`
+    * header) — the seam the SQL catalog plans a snapshot read through,
+    * parsed from one manifest read. The header is the files' physical
+    * schema, not a declaration: it never carries CREATE TABLE semantics. */
+  private[graft] def snapshotInfo(dir: String, version: Option[Int])
+      : (Int, Seq[String], Boolean, Option[StructType]) = {
     val vs = versions(dir)
     require(vs.nonEmpty, s"no committed version at $dir")
     val v = version.getOrElse(vs.last)
     require(vs.contains(v), s"version $v not in $vs")
-    (v, filesOf(dir, v),
-      delFilesOf(dir, v).nonEmpty || eqDelsOf(dir, v).nonEmpty)
+    val raw = rawManifest(dir, v)
+    (v, filesIn(raw), delsIn(raw).nonEmpty || eqDelsIn(raw).nonEmpty,
+      schemaIn(raw))
   }
 
   // ---- manifest-level file skipping (Iceberg-style scan planning) ----
@@ -1907,11 +1992,12 @@ class VersionedTableOps(protected val io: TableIO) {
         val a = l.split('\t')
         a.length >= 3 && (a(1) == "#" || a(2) == "bloom")
       }
+    val raw = rawManifest(dir, version)
     val lines =
       if (!onlyMissing)
-        keep ++ statsLines(spark, dir, filesOf(dir, version), statCols,
-          cbo = true)
-      else keep ++ incrementalStatsLines(spark, dir, version, statCols,
+        keep ++ statsLines(spark, dir, filesIn(raw), statCols,
+          cbo = true, known = schemaIn(raw))
+      else keep ++ incrementalStatsLines(spark, dir, raw, statCols,
         existing)
     io.writeLines(p, derivedHeader(dir, version, lines) ++ lines)
   }
@@ -1940,9 +2026,10 @@ class VersionedTableOps(protected val io: TableIO) {
     * layer rescans too rather than leaving the snapshot histogram fold
     * muted where a full rescan would serve it. */
   private def incrementalStatsLines(spark: SparkSession, dir: String,
-      version: Int, statCols: Seq[String],
+      raw: Seq[String], statCols: Seq[String],
       existing: Seq[String]): Seq[String] = {
-    val all = filesOf(dir, version)
+    val all = filesIn(raw)
+    val known = schemaIn(raw)
     val allSet = all.toSet
     val statLines = existing.filter { l =>
       val a = l.split('\t')
@@ -1970,7 +2057,8 @@ class VersionedTableOps(protected val io: TableIO) {
           !t("nulls") || !t("hll")
         }
     }
-    val fresh1 = statsLines(spark, dir, miss1, statCols, cbo = true)
+    val fresh1 = statsLines(spark, dir, miss1, statCols, cbo = true,
+      known = known)
     val freshTags = tagsOf(fresh1.filter { l =>
       val a = l.split('\t'); a.length >= 3 && a(1) != "#"
     })
@@ -1984,7 +2072,8 @@ class VersionedTableOps(protected val io: TableIO) {
       val m = have.getOrElse(f, Map.empty[String, Set[String]])
       statCols.exists(c => !expected(c).subsetOf(m.getOrElse(c, Set.empty)))
     }
-    val fresh2 = statsLines(spark, dir, miss2, statCols, cbo = true)
+    val fresh2 = statsLines(spark, dir, miss2, statCols, cbo = true,
+      known = known)
     val rescanned = done1 ++ miss2
     statLines.filterNot(l => rescanned(l.takeWhile(_ != '\t'))) ++
       fresh1 ++ fresh2
@@ -2034,10 +2123,14 @@ class VersionedTableOps(protected val io: TableIO) {
     statsSubstitution(dir)
       .map(graft.sql.NestedDefaults.substitute(df, _)).getOrElse(df)
 
+  /** `known`: the physical schema of `files` when the caller has it (the
+    * version's `#schema=` header, or the schema of the batch it just
+    * wrote); it pins the scan when the table declares none. */
   private def statsLines(spark: SparkSession, dir: String,
                          files: Seq[String],
                          statCols: Seq[String],
-                         cbo: Boolean = false): Seq[String] = {
+                         cbo: Boolean = false,
+                         known: Option[StructType] = None): Seq[String] = {
     if (files.isEmpty) return Seq.empty
     statsFilesScanned.addAndGet(files.size)
     // A DECLARED table pins its physical schema on the stats scan:
@@ -2047,6 +2140,7 @@ class VersionedTableOps(protected val io: TableIO) {
     // order). The pin makes pre-evolution files serve typed nulls for
     // later members, exactly the read path's own semantics.
     val declPhys = declPhysOf(dir)
+    val pin = declPhys.orElse(known)
     val subst = declPhys.filter(graft.sql.NestedDefaults.hasAny)
     def substituted(df: DataFrame): DataFrame =
       subst.map(graft.sql.NestedDefaults.substitute(df, _)).getOrElse(df)
@@ -2059,21 +2153,17 @@ class VersionedTableOps(protected val io: TableIO) {
     // FIRST read's schema pins every chunk: chunks of pre-evolution
     // files may lack a physical column entirely, and an explicit schema
     // makes the reader serve it as nulls instead of failing to resolve.
-    def rawRead(fs: Seq[String]): DataFrame = declPhys match {
-      case Some(s) => spark.read.schema(s).parquet(fs: _*)
-      case None => spark.read.parquet(fs: _*)
-    }
     if (files.size > StatsChunkFiles) {
-      // undeclared tables still need ONE schema pinned across chunks
+      // an unpinned table still needs ONE schema pinned across chunks
       // (chunks of pre-evolution files may lack a column entirely)
-      val schema = declPhys.getOrElse(spark.read.parquet(files: _*).schema)
+      val schema = Some(pin.getOrElse(scan(spark, files, None).schema))
       return files.grouped(StatsChunkFiles).flatMap { chunk =>
-        statsLinesChunk(spark,
-          substituted(spark.read.schema(schema).parquet(chunk: _*)),
+        statsLinesChunk(spark, substituted(scan(spark, chunk, schema)),
           statCols, cbo)
       }.toSeq
     }
-    statsLinesChunk(spark, substituted(rawRead(files)), statCols, cbo)
+    statsLinesChunk(spark, substituted(scan(spark, files, pin)), statCols,
+      cbo)
   }
 
   private def statsLinesChunk(spark: SparkSession, raw: DataFrame,
@@ -2282,12 +2372,15 @@ class VersionedTableOps(protected val io: TableIO) {
     // the new files' stats need a scan — do it ONCE, outside the OCC
     // loop; a partition-declared table keeps its transform stats too, so
     // a z-ordered landing never silently drops bucket pruning
+    // writeZordered writes exactly `df`'s columns
+    val phys = physOf(df)
     val newStats = statsLines(spark, dir, newFiles,
       (statCols ++ partitioningOf(dir).flatMap(_.statNames)).distinct,
-      cbo = cboOnCommit(dir))
+      cbo = cboOnCommit(dir), known = Some(phys))
     if (!append) {
       val v = publish(dir, versions(dir).lastOption.getOrElse(0) + 1,
-        s"#ts=${now()}" +: newFiles)
+        s"#ts=${now()}" +: (schemaHeader(Seq.empty, Seq(phys),
+          replacesAll = true) ++ newFiles))
       if (!io.exists(batchDir)) { // the same stalled-past-grace guard
         io.delete(manifestPath(dir, v)) // as [[publishOnHeadTxn]]'s
         throw new IllegalStateException(
@@ -2306,8 +2399,7 @@ class VersionedTableOps(protected val io: TableIO) {
       var headAt: Option[Int] = None
       val v = publishOnHeadRaw(dir, guardFiles = newFiles) { head =>
         headAt = head
-        s"#ts=${now()}" +: (delLinesOf(dir, head) ++
-          eqDelLinesOf(dir, head) ++ carryManifest(dir, head) ++ newSeg)
+        s"#ts=${now()}" +: (carryManifest(dir, head, Seq(phys)) ++ newSeg)
       }
       val hdr = (headAt match {
         case None => Some((0L, 0L))
@@ -2421,9 +2513,10 @@ class VersionedTableOps(protected val io: TableIO) {
   private[graft] def prunedFilesPushed(spark: SparkSession, dir: String,
       version: Int, ranges: Seq[(String, Option[Any], Option[Any])],
       eqs: Seq[(String, Seq[Any])]): Seq[String] = {
-    val keep = rangePruned(dir, version, ranges)
+    val raw = rawManifest(dir, version)
+    val keep = rangePruned(dir, version, raw, ranges)
     eqs.foldLeft(keep) { case (acc, (c, vs)) =>
-      val admit = prunedFilesEq(spark, dir, version, c, vs).toSet
+      val admit = eqPruned(spark, dir, version, raw, c, vs).toSet
       acc.filter(admit)
     }
   }
@@ -2605,11 +2698,12 @@ class VersionedTableOps(protected val io: TableIO) {
     val vs = versions(dir)
     require(vs.nonEmpty, s"no committed version at $dir")
     val v = version.getOrElse(vs.last)
-    val keep = prunedFiles(dir, v, column, lo, hi)
+    val raw = rawManifest(dir, v)
+    val keep = rangePruned(dir, v, raw, Seq((column, Option(lo), Option(hi))))
     if (keep.isEmpty) read(spark, dir, Some(v)).limit(0)
     // the full delete set is applied — vectors for pruned files simply
     // match nothing (anti-join keys are file paths)
-    else readLive(spark, dir, v, keep)
+    else readLive(spark, dir, raw, keep)
   }
 
   /** Candidate file lines of a version with SEGMENT-LEVEL skipping: a
@@ -2619,10 +2713,10 @@ class VersionedTableOps(protected val io: TableIO) {
     * `drop` must be sound against a TRUE cover (covers enclose every
     * payload file's range by construction), so dropping never violates
     * the superset guarantee. */
-  private def coverPrunedFiles(dir: String, version: Int,
+  private def coverPrunedFiles(raw: Seq[String],
       drop: Map[String, (String, String, String)] => Boolean)
       : Seq[String] =
-    io.readLines(manifestPath(dir, version)).flatMap { l =>
+    raw.flatMap { l =>
       if (segRef(l)) {
         if (drop(segCovers(l))) Seq.empty else readSegment(segPath(l))
       } else Seq(l)
@@ -2631,13 +2725,13 @@ class VersionedTableOps(protected val io: TableIO) {
   /** Range-pruned files: segment-level cover skip, then per-file stats
     * refinement — the sidecar's disjoint segments are skipped by the
     * same covers (their files are already out of the candidate list). */
-  private def rangePruned(dir: String, version: Int,
+  private def rangePruned(dir: String, version: Int, raw: Seq[String],
       ranges: Seq[(String, Option[Any], Option[Any])]): Seq[String] = {
     def disjoint(covers: Map[String, (String, String, String)]): Boolean =
       ranges.exists { case (c, lo, hi) =>
         covers.get(c).exists(cov => !mayIntersectOpt(cov, lo, hi))
       }
-    val candidates = coverPrunedFiles(dir, version, disjoint)
+    val candidates = coverPrunedFiles(raw, disjoint)
     if (ranges.isEmpty) return candidates
     val sp = statsPath(dir, version)
     val statLines =
@@ -2665,7 +2759,8 @@ class VersionedTableOps(protected val io: TableIO) {
     * assert the skipping itself, not just result correctness. */
   private[graft] def prunedFiles(dir: String, version: Int, column: String,
                                  lo: Any, hi: Any): Seq[String] =
-    rangePruned(dir, version, Seq((column, Option(lo), Option(hi))))
+    rangePruned(dir, version, rawManifest(dir, version),
+      Seq((column, Option(lo), Option(hi))))
 
   /** Multi-predicate file skipping: a file survives only if EVERY
     * (column, lo, hi) range may intersect its stats — the conjunctive
@@ -2679,14 +2774,16 @@ class VersionedTableOps(protected val io: TableIO) {
     val vs = versions(dir)
     require(vs.nonEmpty, s"no committed version at $dir")
     val v = version.getOrElse(vs.last)
-    val keep = prunedFilesAll(dir, v, predicates)
+    val raw = rawManifest(dir, v)
+    val keep = rangePruned(dir, v, raw,
+      predicates.map { case (c, lo, hi) => (c, Option(lo), Option(hi)) })
     if (keep.isEmpty) read(spark, dir, Some(v)).limit(0)
-    else readLive(spark, dir, v, keep)
+    else readLive(spark, dir, raw, keep)
   }
 
   private[graft] def prunedFilesAll(dir: String, version: Int,
       predicates: Seq[(String, Any, Any)]): Seq[String] =
-    rangePruned(dir, version,
+    rangePruned(dir, version, rawManifest(dir, version),
       predicates.map { case (c, lo, hi) => (c, Option(lo), Option(hi)) })
 
   // ---- bloom-filter file skipping (point lookups / IN-lists) ----
@@ -2721,7 +2818,8 @@ class VersionedTableOps(protected val io: TableIO) {
       s"mBits must be >= 64 and a multiple of 8: $mBits")
     val p = statsPath(dir, version)
     val existing = if (io.exists(p)) io.readLines(p) else Seq.empty
-    val files = filesOf(dir, version)
+    val raw = rawManifest(dir, version)
+    val files = filesIn(raw)
     // The bitmap is OR-folded on the EXECUTORS (fixed m/8-byte buffer per
     // file, map-side partials merge before the shuffle); the driver
     // collects only the ~m/8-byte finished bitmap per file. Collecting
@@ -2745,10 +2843,10 @@ class VersionedTableOps(protected val io: TableIO) {
         // full-set schema pins every chunk (a chunk of pre-evolution
         // files may lack the bloom column; the explicit schema serves it
         // as nulls instead of failing to resolve).
-        val pinned = declPhysOf(dir)
-          .getOrElse(spark.read.parquet(need: _*).schema)
+        val pinned = Some(physSchemaOf(dir, raw)
+          .getOrElse(scan(spark, need, None).schema))
         need.grouped(StatsChunkFiles).toSeq.flatMap { chunk =>
-          spark.read.schema(pinned).parquet(chunk: _*)
+          scan(spark, chunk, pinned)
             .select(plainPath.as("__file"), explode(posArr).as("pos"))
             .groupBy(col("__file")).agg(bloomAgg(col("pos")).as("bits"))
             .collect().toSeq
@@ -2770,13 +2868,18 @@ class VersionedTableOps(protected val io: TableIO) {
     * (one 1-row job casting each value to the column's own type), so
     * build and probe hash identically by construction. */
   private[graft] def prunedFilesEq(spark: SparkSession, dir: String,
-      version: Int, column: String, values: Seq[Any]): Seq[String] = {
+      version: Int, column: String, values: Seq[Any]): Seq[String] =
+    eqPruned(spark, dir, version, rawManifest(dir, version), column, values)
+
+  /** [[prunedFilesEq]] over version `version`'s already-read manifest. */
+  private def eqPruned(spark: SparkSession, dir: String, version: Int,
+      raw: Seq[String], column: String, values: Seq[Any]): Seq[String] = {
     require(values.nonEmpty && values.forall(_ != null),
       "equality pruning needs non-null probe values")
     // segment-level skip first: a segment whose cover excludes EVERY
     // probe value cannot hold a match — dropped unread, same soundness
     // as the range path (covers are true enclosures)
-    val files = coverPrunedFiles(dir, version, covers =>
+    val files = coverPrunedFiles(raw, covers =>
       covers.get(column).exists(cov =>
         values.forall(v => !mayIntersect(cov, v, v))))
     if (files.isEmpty) return files
@@ -2802,7 +2905,12 @@ class VersionedTableOps(protected val io: TableIO) {
       bucketSpecs.map(b => b -> statsOf(dir, version, b.spec))
         .filter(_._2.nonEmpty)
     if (blooms.isEmpty && stats.isEmpty && bucketStats.isEmpty) return files
-    val dt = spark.read.parquet(files.head).schema(column).dataType
+    // the type the files were WRITTEN with (bucket ids and bloom
+    // positions hash by it): the `#schema=` header when every file
+    // carries one schema, else the first file's footer — never the
+    // declaration, which a widened column has moved past old files
+    val dt = schemaIn(raw)
+      .getOrElse(scan(spark, Seq(files.head), None).schema)(column).dataType
     // probe bucket ids per spec vintage, hashed by the ENGINE through
     // the same expression each landing clustered with — build and probe
     // agree by construction; ONE tiny job covers every (spec, value)
@@ -2862,9 +2970,10 @@ class VersionedTableOps(protected val io: TableIO) {
     val vs = versions(dir)
     require(vs.nonEmpty, s"no committed version at $dir")
     val v = version.getOrElse(vs.last)
-    val keep = prunedFilesEq(spark, dir, v, column, values)
+    val raw = rawManifest(dir, v)
+    val keep = eqPruned(spark, dir, v, raw, column, values)
     if (keep.isEmpty) read(spark, dir, Some(v)).limit(0)
-    else readLive(spark, dir, v, keep)
+    else readLive(spark, dir, raw, keep)
   }
 
   /** Manifest-level join pruning — static DPP one storage level up: ONE
@@ -3020,10 +3129,12 @@ class VersionedTableOps(protected val io: TableIO) {
     // a z-order pass rewrites EVERY admitted file regardless of size —
     // re-layout is the point, not bin-packing — while a plain compact
     // only gathers the under-target ones
-    val small = filesOf(dir, head)
+    val raw = rawManifest(dir, head)
+    val headFiles = filesIn(raw)
+    val small = headFiles
       .filter(f => inScope(f) && (zorder.isDefined || io.size(f) < targetBytes))
-    val delsAtStart = delFilesOf(dir, head)
-    val eqsAtStart = eqDelsOf(dir, head)
+    val delsAtStart = delsIn(raw)
+    val eqsAtStart = eqDelsIn(raw)
     // minInputFiles is a bin-packing heuristic; it must not veto a
     // debt-clearing pass — compact is the materialization path
     // ([[deleteByKeys]]' contract sends dependent ops here, the SQL
@@ -3050,7 +3161,7 @@ class VersionedTableOps(protected val io: TableIO) {
         }
         def delTouches = delsAtStart.nonEmpty && {
           val sm = small.toSet
-          spark.read.parquet(delsAtStart: _*).select("file_path")
+          readDelVectors(spark, delsAtStart).select("file_path")
             .distinct().collect().exists(r => sm(r.getString(0)))
         }
         eqTouches || delTouches
@@ -3066,7 +3177,7 @@ class VersionedTableOps(protected val io: TableIO) {
     // version, past every existing delete's seq, so carrying the lines
     // for them would silently stop applying); deletes for kept files are
     // consolidated/carried below
-    val live = readLive(spark, dir, head, small)
+    val live = readLive(spark, dir, raw, small)
     val sortCols = sortOrderOf(dir)
       .filter(c => live.columns.exists(_.equalsIgnoreCase(c)))
     // the declared sort order rides every compaction: range-partition on
@@ -3092,8 +3203,8 @@ class VersionedTableOps(protected val io: TableIO) {
     val survivorDel: Seq[String] =
       if (delsAtStart.isEmpty) Seq.empty
       else {
-        val keptSet = filesOf(dir, head).filterNot(smallSet).toSet
-        val survivors = spark.read.parquet(delsAtStart: _*)
+        val keptSet = headFiles.filterNot(smallSet).toSet
+        val survivors = readDelVectors(spark, delsAtStart)
           .filter(col("file_path").isInCollection(
             if (keptSet.isEmpty) Seq("") else keptSet.toSeq))
         val sDir = s"$dir/deletes/${java.util.UUID.randomUUID}"
@@ -3116,9 +3227,11 @@ class VersionedTableOps(protected val io: TableIO) {
     val cols =
       ((if (statCols.nonEmpty) statCols else statColsOf(dir, head)) ++
         sortCols ++ zorder.toSeq.flatMap(_._1)).distinct
+    val phys = physOf(live)
     val newStats =
       if (cols.isEmpty) rowsLines(spark, newFiles)
-      else statsLines(spark, dir, newFiles, cols, cbo = cboOnCommit(dir))
+      else statsLines(spark, dir, newFiles, cols, cbo = cboOnCommit(dir),
+        known = Some(phys))
     val delRows = rowsLines(spark, survivorDel)
     // old vectors are replaced by the consolidated survivor — their rows
     // lines drop with the rewritten data files' (segment-preserving
@@ -3160,7 +3273,8 @@ class VersionedTableOps(protected val io: TableIO) {
         Seq(s"#ts=${now()}") ++
         survivorDel.map(f => s"#del=$f") ++
         liveEq.map { case (s, c2, p) => s"#eqdel=$s\t$c2\t$p" } ++
-        carryManifestExcept(dir, h, removed, smallSet) ++ newSeg
+        carryManifestExcept(dir, h, removed, smallSet,
+          if (newFiles.isEmpty) Seq.empty else Seq(phys)) ++ newSeg
     }
     io.writeLines(statsPath(dir, v),
       rewriteHeader(dir, headAt, smallSet, delsAtStart.toSet, dropped,
@@ -3594,20 +3708,22 @@ class VersionedTableOps(protected val io: TableIO) {
     val vs = versions(dir)
     require(vs.nonEmpty, s"no committed version at $dir")
     val head = vs.last
-    val rewrite = filesOf(dir, head)
+    val raw = rawManifest(dir, head)
+    val rewrite = filesIn(raw)
     val rewriteSet = rewrite.toSet
-    val delsAtStart = delFilesOf(dir, head)
-    val eqsAtStart = eqDelsOf(dir, head)
+    val delsAtStart = delsIn(raw)
+    val eqsAtStart = eqDelsIn(raw)
     val batchDir = s"$dir/data/${java.util.UUID.randomUUID}"
     // live view of the WHOLE head: positional vectors anti-joined,
     // equality deletes applied — the rewrite materializes them all
-    Layout.writeZordered(readLive(spark, dir, head, rewrite), zCols,
-      batchDir, numFiles, bitsPerDim)
+    val live = readLive(spark, dir, raw, rewrite)
+    Layout.writeZordered(live, zCols, batchDir, numFiles, bitsPerDim)
+    val phys = physOf(live)
     val newFiles = io.list(batchDir).filter(_.endsWith(".parquet")).sorted
       .map(n => s"$batchDir/$n")
     val cols = (statColsOf(dir, head) ++ zCols).distinct
     val newStats = statsLines(spark, dir, newFiles, cols,
-      cbo = cboOnCommit(dir))
+      cbo = cboOnCommit(dir), known = Some(phys))
     // the superseded delete vectors' rows lines drop with the rewrite
     // (their rows were materialized into the clustered copy)
     val removed = rewriteSet ++ delsAtStart
@@ -3631,7 +3747,8 @@ class VersionedTableOps(protected val io: TableIO) {
       // concurrent appends (files beyond our rewrite set) survive as-is
       h.toSeq.flatMap(metaOf(dir, _)).filter(_.startsWith("#txn=")) ++
         Seq(s"#ts=${now()}") ++
-        carryManifestExcept(dir, h, removed, rewriteSet) ++ newSeg
+        carryManifestExcept(dir, h, removed, rewriteSet,
+          if (newFiles.isEmpty) Seq.empty else Seq(phys)) ++ newSeg
     }
     io.writeLines(statsPath(dir, v),
       rewriteHeader(dir, headAt, rewriteSet, delsAtStart.toSet, dropped,
@@ -3772,12 +3889,14 @@ class VersionedTableOps(protected val io: TableIO) {
     val vs = versions(dir)
     require(vs.nonEmpty, s"no committed version at $dir")
     val head = vs.last
-    val filesAtStart = filesOf(dir, head)
-    val delsAtStart = delFilesOf(dir, head)
+    val raw = rawManifest(dir, head)
+    val filesAtStart = filesIn(raw)
+    val delsAtStart = delsIn(raw)
+    val mergePin = physSchemaOf(dir, raw)
     // the rewrite's candidate selection and survivor logic reason about
     // per-file row liveness; layering era-scoped equality deletes under
     // that would be easy to get silently wrong — normalize first instead
-    require(eqDelsOf(dir, head).isEmpty,
+    require(eqDelsIn(raw).isEmpty,
       s"$dir carries unmaterialized equality deletes; run compact() to " +
         s"fold them into the data files before MERGE")
 
@@ -3821,7 +3940,7 @@ class VersionedTableOps(protected val io: TableIO) {
       // bounded collect (≤ file count)
       val touched: Seq[String] =
         if (candidates.isEmpty) Seq.empty
-        else taggedLive(spark, candidates, delsAtStart)
+        else taggedLive(spark, candidates, delsAtStart, mergePin)
           .join(affectedKeys, Seq(key), "left_semi")
           .select("__graft_file").distinct()
           .collect().map(_.getString(0)).toSeq
@@ -3833,9 +3952,9 @@ class VersionedTableOps(protected val io: TableIO) {
       // as a plain new file, in the table's column order (schema-only
       // read, no data scanned)
       val batchDir = s"$dir/data/${java.util.UUID.randomUUID}"
-      val mergePin = declPhysOf(dir)
-      val tableCols = mergePin.map(_.fieldNames)
-        .getOrElse(spark.read.parquet(filesAtStart.head).columns)
+      val tableCols = mergePin
+        .getOrElse(scan(spark, Seq(filesAtStart.head), None).schema)
+        .fieldNames
       val rewritten =
         if (touched.isEmpty) src.select(tableCols.map(col).toSeq: _*)
         else readFiles(spark, touched, delsAtStart, mergePin)
@@ -3864,7 +3983,7 @@ class VersionedTableOps(protected val io: TableIO) {
         if (delsAtStart.isEmpty || touchedSet.isEmpty) delsAtStart
         else {
           val keptSet = filesAtStart.filterNot(touchedSet).toSet
-          val survivors = spark.read.parquet(delsAtStart: _*)
+          val survivors = readDelVectors(spark, delsAtStart)
             .filter(col("file_path").isInCollection(
               if (keptSet.isEmpty) Seq("") else keptSet.toSeq))
           val sDir = s"$dir/deletes/${java.util.UUID.randomUUID}"
@@ -3881,13 +4000,15 @@ class VersionedTableOps(protected val io: TableIO) {
         }
 
       val cols = statColsOf(dir, head)
+      val added = if (newFiles.isEmpty) Seq.empty else Seq(physOf(rewritten))
       // new data files: full stats when the head tracks columns (the scan
       // also yields their rows lines), plain footer counts otherwise; the
       // (possibly rewritten) survivor vector records its count too
       val newStats =
         if (newFiles.isEmpty) Seq.empty
         else if (cols.isEmpty) rowsLines(spark, newFiles)
-        else statsLines(spark, dir, newFiles, cols, cbo = cboOnCommit(dir))
+        else statsLines(spark, dir, newFiles, cols, cbo = cboOnCommit(dir),
+          known = added.headOption)
       val delRows = rowsLines(spark, survivorDel)
       val removed = touchedSet ++ delsAtStart
       val newSeg = segLine(dir, newFiles, coversOf(newStats))
@@ -3923,7 +4044,7 @@ class VersionedTableOps(protected val io: TableIO) {
           txnId.map(t => s"#txn=$t").toSeq ++
           Seq(s"#ts=${now()}") ++
           survivorDel.map(f => s"#del=$f") ++
-          carryManifestExcept(dir, h, removed, touchedSet) ++ newSeg
+          carryManifestExcept(dir, h, removed, touchedSet, added) ++ newSeg
       } match {
         case Left(existing) =>
           // a LIVE writer carrying the same txn won the race (the entry
@@ -3993,10 +4114,11 @@ class VersionedTableOps(protected val io: TableIO) {
     val vs = versions(dir)
     require(vs.nonEmpty, s"no committed version at $dir")
     val head = vs.last
-    val filesAtStart = filesOf(dir, head)
+    val raw = rawManifest(dir, head)
+    val filesAtStart = filesIn(raw)
     require(filesAtStart.nonEmpty, s"$dir head has no data files")
-    val delsAtStart = delFilesOf(dir, head)
-    require(eqDelsOf(dir, head).isEmpty,
+    val delsAtStart = delsIn(raw)
+    require(eqDelsIn(raw).isEmpty,
       s"$dir carries unmaterialized equality deletes; run compact() to " +
         s"fold them into the data files before MERGE")
     val bySource = notMatchedBySource.nonEmpty
@@ -4007,9 +4129,9 @@ class VersionedTableOps(protected val io: TableIO) {
       require(dupes == 0,
         s"source has duplicate '$sourceKey' values — a MERGE with a " +
           s"many-to-one match is ambiguous; dedupe the source first")
-      val updPin = declPhysOf(dir)
+      val updPin = physSchemaOf(dir, raw)
       val tschema = updPin
-        .getOrElse(spark.read.parquet(filesAtStart.head).schema)
+        .getOrElse(scan(spark, Seq(filesAtStart.head), None).schema)
       val tcols = tschema.fieldNames.toSeq
       notMatched.foreach { c =>
         val vals = c.action.asInstanceOf[MergeInsert].values
@@ -4135,7 +4257,7 @@ class VersionedTableOps(protected val io: TableIO) {
         if (delsAtStart.isEmpty || touchedSet.isEmpty) delsAtStart
         else {
           val keptSet = filesAtStart.filterNot(touchedSet).toSet
-          val survivors = spark.read.parquet(delsAtStart: _*)
+          val survivors = readDelVectors(spark, delsAtStart)
             .filter(col("file_path").isInCollection(
               if (keptSet.isEmpty) Seq("") else keptSet.toSeq))
           val sDir = s"$dir/deletes/${java.util.UUID.randomUUID}"
@@ -4152,10 +4274,12 @@ class VersionedTableOps(protected val io: TableIO) {
         }
 
       val cols = statColsOf(dir, head)
+      val added = if (newFiles.isEmpty) Seq.empty else Seq(physOf(rewritten))
       val newStats =
         if (newFiles.isEmpty) Seq.empty
         else if (cols.isEmpty) rowsLines(spark, newFiles)
-        else statsLines(spark, dir, newFiles, cols, cbo = cboOnCommit(dir))
+        else statsLines(spark, dir, newFiles, cols, cbo = cboOnCommit(dir),
+          known = added.headOption)
       val delRows = rowsLines(spark, survivorDel)
       val removed = touchedSet ++ delsAtStart
       val newSeg = segLine(dir, newFiles, coversOf(newStats))
@@ -4198,7 +4322,7 @@ class VersionedTableOps(protected val io: TableIO) {
         h.toSeq.flatMap(metaOf(dir, _)).filter(_.startsWith("#txn=")) ++
           Seq(s"#ts=${now()}") ++
           survivorDel.map(f => s"#del=$f") ++
-          carryManifestExcept(dir, h, removed, touchedSet) ++ newSeg
+          carryManifestExcept(dir, h, removed, touchedSet, added) ++ newSeg
       }
       io.writeLines(statsPath(dir, v),
         rewriteHeader(dir, headAt, touchedSet, delsAtStart.toSet, dropped,
@@ -4669,7 +4793,7 @@ class VersionedTableOps(protected val io: TableIO) {
     // immutable, so a fork is O(pointers) — the parent's [[expire]] pins
     // segments any live branch still references, exactly like data files
     publish(bd, 1, Seq(s"#fork=$v", s"#ts=${now()}") ++
-      delLinesOf(dir, Some(v)) ++ carryManifest(dir, Some(v)))
+      carryManifest(dir, Some(v), Seq.empty))
     val sp = statsPath(dir, v)
     if (io.exists(sp)) io.writeLines(statsPath(bd, 1), io.readLines(sp))
     // the fork carries the parent's DECLARATION, not just file
@@ -4764,12 +4888,17 @@ class VersionedTableOps(protected val io: TableIO) {
     // segments, which retireBranch will delete — expand and re-segment
     // into the PARENT's segment store so the promoted head owns its
     // metadata outright (one O(branch-metadata) copy at promote time)
-    val bhFiles = filesOf(bd, bh)
+    val bhRaw = rawManifest(bd, bh)
+    val bhFiles = filesIn(bhRaw)
     val fileLines =
       if (bhFiles.length >= foldInlineAt(dir))
         Seq(SegPrefix + writeSegment(dir, bhFiles))
       else bhFiles
-    val lines = Seq(s"#ts=${now()}") ++ delLinesOf(bd, Some(bh)) ++ fileLines
+    // the same file set as the branch head: its schema header and delete
+    // vectors hold as they are
+    val bhHeaders = schemaHeader(bhRaw, Seq.empty, replacesAll = false) ++
+      bhRaw.filter(_.startsWith("#del="))
+    val lines = Seq(s"#ts=${now()}") ++ bhHeaders ++ fileLines
     if (!io.createExclusive(manifestPath(dir, fork + 1), lines))
       throw new java.util.ConcurrentModificationException(
         s"$dir advanced during fast-forward of '$name'; re-fork and replay")
@@ -4788,7 +4917,7 @@ class VersionedTableOps(protected val io: TableIO) {
     }
     // ownership flip: the parent references the branch's files now
     publish(bd, bh + 1, Seq(s"#promoted=$dir", s"#ts=${now()}") ++
-      delLinesOf(bd, Some(bh)) ++ filesOf(bd, bh))
+      bhHeaders ++ bhFiles)
     fork + 1
   }
 
@@ -4930,8 +5059,11 @@ class VersionedTableOps(protected val io: TableIO) {
     require(eqDelsOf(fromDir, fv).isEmpty,
       s"$fromDir carries unmaterialized equality deletes; run compact() " +
         s"on staging before promoting (seq scoping does not transfer)")
-    val fromFiles = filesOf(fromDir, fv)
-    val fromDels = delLinesOf(fromDir, Some(fv))
+    val fromRaw = rawManifest(fromDir, fv)
+    val fromFiles = filesIn(fromRaw)
+    val fromDels = fromRaw.filter(_.startsWith("#del="))
+    // the staged files' physical schema, when their header records one
+    val fromSchema = schemaIn(fromRaw).toSeq
     // EXPANDED copy, not pointer carry: retire() deletes the staging
     // table's segment files, so the promoted-to sidecar must own its lines
     val fromStats = sidecarLines(fromDir, fv)
@@ -4973,9 +5105,11 @@ class VersionedTableOps(protected val io: TableIO) {
         var headAt: Option[Int] = None
         val v0 = publishOnHeadRaw(toDir) { h =>
           headAt = h
-          Seq(s"#ts=${now()}") ++ delLinesOf(toDir, h) ++
-            eqDelLinesOf(toDir, h) ++ fromDels ++
-            carryManifest(toDir, h) ++ fromFiles
+          // staged files of unrecorded schema void the header
+          val carried = carryManifest(toDir, h, fromSchema).filterNot(l =>
+            fromSchema.isEmpty && fromFiles.nonEmpty &&
+              l.startsWith(SchemaPrefix))
+          Seq(s"#ts=${now()}") ++ carried ++ fromDels ++ fromFiles
         }
         val hdr = headerOrUpgrade(toDir, headAt).flatMap {
           case (d, del) =>
@@ -4991,7 +5125,9 @@ class VersionedTableOps(protected val io: TableIO) {
         v0
       } else {
         val v0 = publish(toDir, versions(toDir).lastOption.getOrElse(0) + 1,
-          Seq(s"#ts=${now()}") ++ fromDels ++ fromFiles)
+          Seq(s"#ts=${now()}") ++
+            schemaHeader(Seq.empty, fromSchema, replacesAll = true) ++
+            fromDels ++ fromFiles)
         if (fromStats.nonEmpty)
           io.writeLines(statsPath(toDir, v0),
             derivedHeader(toDir, v0, fromStats) ++ fromStats)
@@ -5001,7 +5137,8 @@ class VersionedTableOps(protected val io: TableIO) {
     // expire() refuses on this marker, retire() is the exit
     publish(fromDir, fromVs.last + 1,
       Seq(s"#promoted=$toDir", s"#ts=${now()}") ++
-        delLinesOf(fromDir, Some(fv)) ++ fromFiles)
+        schemaHeader(fromRaw, Seq.empty, replacesAll = false) ++
+        fromDels ++ fromFiles)
     v
   }
 
@@ -5126,7 +5263,7 @@ class VersionedTableOps(protected val io: TableIO) {
     val dels = delFilesOf(dir, v)
     if (dels.isEmpty) files.withColumn("n_deleted", lit(0L))
     else files.join(
-      spark.read.parquet(dels: _*).groupBy(col("file_path"))
+      readDelVectors(spark, dels).groupBy(col("file_path"))
         .agg(count(lit(1)).as("n_deleted")),
       files("file") === col("file_path"), "left")
       .drop("file_path")

@@ -321,9 +321,11 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
         val m = graft.sinks.SnapshotGroup.memberOf(base, alias, pinned)
         val declaredG = ops.declaredSchema(m.dir)
           .map(DataType.fromJson(_).asInstanceOf[StructType])
-        val (gv, gFiles, gDebt) = ops.snapshotInfo(m.dir, Some(m.version))
+        val (gv, gFiles, gDebt, gPhys) =
+          ops.snapshotInfo(m.dir, Some(m.version))
         return new GraftTable(s"$catName.$base#table=$alias", spark,
-          catName, m.dir, gv, gFiles, gDebt, declaredG, readOnly = true)
+          catName, m.dir, gv, gFiles, gDebt, declaredG, readOnly = true,
+          fileSchema = gPhys)
       case (base, RefCdf(a, b)) =>
         // the KEYED i/u/d feed across (a, b] — the exact per-transition
         // union the streaming reader serves (TableStreamSource.cdfSlice
@@ -403,7 +405,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
         case None => throw new NoSuchTableException(ident)
       }
     } else {
-      val (v, files, debt) =
+      val (v, files, debt, phys) =
         try ops.snapshotInfo(dir, version)
         catch { case _: IllegalArgumentException =>
           throw new NoSuchTableException(ident)
@@ -411,7 +413,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
       if (files.isEmpty && declared.isEmpty)
         throw new NoSuchTableException(ident)
       new GraftTable(s"$catName.$dir@v$v", spark, catName, dir, v,
-        files, debt, declared, readOnly = ro)
+        files, debt, declared, readOnly = ro, fileSchema = phys)
     }
   }
 
@@ -1793,7 +1795,8 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
 private[sql] class GraftTable(tblName: String, spark: SparkSession,
     catName: String, dir: String, pinnedVersion: Int, files: Seq[String],
     debt: Boolean, declared: Option[StructType],
-    readOnly: Boolean = false, slice: Boolean = false)
+    readOnly: Boolean = false, slice: Boolean = false,
+    fileSchema: Option[StructType] = None)
     extends Table with SupportsRead with SupportsWrite with SupportsDelete {
 
   override def name(): String = tblName
@@ -1863,11 +1866,15 @@ private[sql] class GraftTable(tblName: String, spark: SparkSession,
     * silently land on the head instead. */
   private[sql] def isReadOnly: Boolean = readOnly
 
-  /** Declared schema if CREATE TABLE pinned one; else inferred ONCE from
-    * the snapshot's own files through the stock parquet path. */
-  override lazy val schema: StructType = declared.getOrElse(
-    ParquetTable(tblName, spark, CaseInsensitiveStringMap.empty(), files,
-      None, classOf[ParquetFileFormat]).schema)
+  /** The declared schema if CREATE TABLE pinned one; else `fileSchema`,
+    * the snapshot's `#schema=` manifest header (every live file's
+    * physical schema, no footer read); else — a snapshot written without
+    * the header — inferred from the files through the stock parquet
+    * path, one footer-sampling Spark job per table object (Spark loads
+    * the table more than once per statement). */
+  override lazy val schema: StructType = declared.orElse(fileSchema)
+    .getOrElse(ParquetTable(tblName, spark, CaseInsensitiveStringMap.empty(),
+      files, None, classOf[ParquetFileFormat]).schema)
 
   /** logical → physical renames from the declared column mapping (empty
     * for tables that never renamed — every path below short-circuits). */
