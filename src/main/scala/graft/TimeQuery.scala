@@ -3,20 +3,43 @@ package graft
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Dev tool (not part of the driver contract): run ONE registered query
   * through the noop sink and print a per-Spark-job time breakdown — the
   * "where do the seconds go" view the optimization loop needs when a
   * query is many small jobs (lake commits, iterative rounds, in-query
-  * requires) rather than one big one. Usage:
+  * requires) rather than one big one — or print its plans instead
+  * (see [[printPlan]]). Usage:
   *   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
-  *     sbt "runMain graft.TimeQuery q_sql_dedup [runs]"
+  *     sbt "runMain graft.TimeQuery q_sql_dedup [runs | --plan | --plan=exec]"
   */
 object TimeQuery {
+  /** `--plan`: the optimized plan with the optimizer's size estimates and
+    * the static physical plan. The plan is built (which executes eager
+    * checkpoints in the lineage) but the query itself never runs.
+    * `--plan=exec`: run the query once and print the AQE-final plan —
+    * stage reuse, runtime join switches and codegen collapse only appear
+    * after execution. */
+  private def printPlan(df: DataFrame, name: String, dir: String,
+                        mode: String): Unit = mode match {
+    case "--plan" =>
+      println(s"==== $name @ $dir: optimized plan with stats ====")
+      println(df.queryExecution.optimizedPlan.treeString(
+        verbose = false, addSuffix = true))
+      println(s"==== $name @ $dir: static physical plan ====")
+      println(df.queryExecution.sparkPlan.treeString)
+    case "--plan=exec" =>
+      println(s"==== $name ====")
+      df.collect()
+      println(df.queryExecution.executedPlan.toString)
+    case other =>
+      sys.error(s"unknown option $other: use --plan or --plan=exec")
+  }
+
   def main(args: Array[String]): Unit = {
     val name = args(0)
-    val runs = args.drop(1).headOption.map(_.toInt).getOrElse(2)
+    val mode = args.drop(1).headOption
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
@@ -28,6 +51,12 @@ object TimeQuery {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    if (mode.exists(_.startsWith("--plan"))) {
+      printPlan(SparkEntry.queries(name)(spark, sfDir), name, sfDir, mode.get)
+      spark.stop()
+      return
+    }
+    val runs = mode.map(_.toInt).getOrElse(2)
     val starts = new TrieMap[Int, (Long, String)]
     val jobs = new java.util.concurrent.CopyOnWriteArrayList[(Int, Double, String)]
     val stageTasks = new TrieMap[Int, (Int, Long)] // stage -> (tasks, ms sum)

@@ -345,7 +345,7 @@ class VersionedTableOps(protected val io: TableIO) {
       }
     }
 
-  /** Carry the head's bulk manifest MINUS `removed`, preserving
+  /** Carry the head's bulk manifest (`raw`) MINUS `removed`, preserving
     * untouched segments: a pointer none of whose payload files is
     * removed carries verbatim (covers and all); a touched segment
     * re-lands as its filtered remainder under the ORIGINAL cover (a
@@ -359,15 +359,14 @@ class VersionedTableOps(protected val io: TableIO) {
     * copy NEXT TO the winner's — the same rows twice. Absence throws
     * [[SnapshotShapeConflict]]; the caller's bounded OCC retry recomputes
     * against the new head. Delete-vector members of `removed` are
-    * validated separately by each caller's dels-unchanged check (they
+    * validated separately by [[publishRewrite]]'s dels-unchanged check (they
     * live on `#del=` lines this carry never touches). The `#schema=`
     * header is settled as in [[carryManifest]]; a rewrite that keeps no
     * head file takes the schema of what it lands. */
-  private def carryManifestExcept(dir: String, h: Option[Int],
+  private def carryManifestExcept(dir: String, raw: Seq[String],
       removed: Set[String], mustExist: Set[String],
       added: Seq[StructType]): Seq[String] = {
     val found = scala.collection.mutable.Set.empty[String]
-    val raw = h.toSeq.flatMap(rawManifest(dir, _))
     val lines = raw.flatMap { l =>
       if (segRef(l)) {
         val payload = readSegment(segPath(l))
@@ -3008,6 +3007,112 @@ class VersionedTableOps(protected val io: TableIO) {
     sidecarLines(dir, version).map(_.split('\t'))
       .collect { case a if a.length >= 2 && a(1) != "#" => a(1) }.distinct
 
+  /** The parquet files a write landed under `dir`, sorted. */
+  private def parquetIn(dir: String): Seq[String] =
+    io.list(dir).filter(_.endsWith(".parquet")).sorted.map(n => s"$dir/$n")
+
+  /** The one commit of every copy-on-write rewrite ([[merge]],
+    * [[mergeChanges]], [[mergeInto]], [[compact]] and its scoped forms,
+    * [[optimizeZorder]]): publish "the files `replaced` of version `head`
+    * (raw manifest `raw`) are now `newFiles`" on the OCC head. `newFiles`
+    * were written from a frame of physical schema `phys`; they get stats
+    * for `statCols` (row counts only when empty).
+    *
+    * Deletes: the rewrite materialized every delete of the replaced
+    * files. Positional vectors of kept files survive, consolidated into
+    * one vector (carried as they are when nothing is replaced); an
+    * equality delete survives while it still applies to a kept file.
+    *
+    * Each attempt refuses a head whose delete state moved since `raw` —
+    * a delete landing mid-rewrite references files this rewrite already
+    * copied without it, so carrying it would half-apply it and dropping
+    * it would resurrect rows ([[SnapshotShapeConflict]], worded with `op`
+    * and `rerun`). `onHead` runs the caller's own checks on the fresh
+    * head's raw manifest first. With `txnId` the commit is exactly-once:
+    * a live writer that already landed the same transaction wins, and
+    * its version is returned (this rewrite's files are orphan-sweep
+    * debris). Returns the version. */
+  private def publishRewrite(spark: SparkSession, dir: String, op: String,
+      rerun: String, head: Int, raw: Seq[String], replaced: Set[String],
+      newFiles: Seq[String], phys: StructType, statCols: Seq[String],
+      txnId: Option[String] = None,
+      onHead: Seq[String] => Unit = _ => ()): Int = {
+    val dels = delsIn(raw)
+    val eqs = eqDelsIn(raw)
+    val kept = filesIn(raw).filterNot(replaced)
+    val survivorDel: Seq[String] =
+      if (dels.isEmpty || replaced.isEmpty) dels
+      else if (kept.isEmpty) Seq.empty
+      else {
+        val survivors = readDelVectors(spark, dels)
+          .filter(col("file_path").isInCollection(kept))
+        val sDir = s"$dir/deletes/${java.util.UUID.randomUUID}"
+        survivors.coalesce(1).write.parquet(sDir)
+        val out = parquetIn(sDir)
+        // emptiness from the footers (driver-local) — re-reading the
+        // just-written vector was one extra Spark job per rewrite
+        if (footerRowCounts(spark, out).values.sum == 0L) {
+          io.list(sDir).foreach(n => io.delete(s"$sDir/$n"))
+          io.delete(sDir)
+          Seq.empty
+        } else out
+      }
+    // a surviving equality delete must still APPLY to a kept file
+    // (otherwise it would linger forever and keep expire refusing); files
+    // appended after `head` never count — every delete here predates them
+    val liveEq =
+      if (eqs.isEmpty) eqs
+      else {
+        val keptAdded = addedAtOf(dir, kept)
+        eqs.filter { case (s, _, _) =>
+          kept.exists(f => keptAdded.getOrElse(f, 0) < s)
+        }
+      }
+    val added = if (newFiles.isEmpty) Seq.empty else Seq(phys)
+    val newStats =
+      if (newFiles.isEmpty) Seq.empty
+      else if (statCols.isEmpty) rowsLines(spark, newFiles)
+      else statsLines(spark, dir, newFiles, statCols, cbo = cboOnCommit(dir),
+        known = Some(phys))
+    val delRows = rowsLines(spark, survivorDel)
+    // the old vectors' rows lines drop with the replaced files' (the
+    // survivors re-land theirs); untouched segments ride verbatim
+    val removed = replaced ++ dels
+    val newSeg = segLine(dir, newFiles, coversOf(newStats))
+    val newStatsSeg = segLine(dir, newStats ++ delRows,
+      coversOf(newStats ++ delRows))
+    var carried: Seq[String] = Seq.empty
+    var dropped: Map[String, Long] = Map.empty
+    var headAt: Option[Int] = None
+    publishOnHeadTxn(dir, txnId, guardFiles = newFiles ++ survivorDel) { h =>
+      val hRaw = h.toSeq.flatMap(rawManifest(dir, _))
+      if (delsIn(hRaw).toSet != dels.toSet)
+        throw new SnapshotShapeConflict(
+          s"delete vectors changed during $op; $rerun against the new head")
+      onHead(hRaw)
+      if (eqDelsIn(hRaw).toSet != eqs.toSet)
+        throw new SnapshotShapeConflict(
+          s"equality deletes changed during $op; $rerun against the new head")
+      headAt = h
+      val (c, dr) = carrySidecarExcept(dir, h, removed)
+      carried = c; dropped = dr
+      // carry the head's txn ledger forward but stamp our OWN wall clock —
+      // the rewritten snapshot is a new commit, not a re-dating of the old
+      hRaw.filter(_.startsWith("#txn=")) ++ txnId.map(t => s"#txn=$t") ++
+        Seq(s"#ts=${now()}") ++
+        survivorDel.map(f => s"#del=$f") ++
+        liveEq.map { case (s, c, p) => s"#eqdel=$s\t$c\t$p" } ++
+        carryManifestExcept(dir, hRaw, removed, replaced, added) ++ newSeg
+    } match {
+      case Left(existing) => existing
+      case Right(v) =>
+        io.writeLines(statsPath(dir, v),
+          rewriteHeader(dir, headAt, replaced, dels.toSet, dropped,
+            sumRows(newStats), sumRows(delRows)) ++ carried ++ newStatsSeg)
+        v
+    }
+  }
+
   /** Bin-pack compaction — the maintenance op a streaming landing needs
     * most: after 10^5 [[commitOnce]] micro-batches the head manifest
     * lists 10^5 tiny file groups, and every reader pays for them. This
@@ -3175,8 +3280,8 @@ class VersionedTableOps(protected val io: TableIO) {
     // positional vectors (positions don't transfer to rewritten files) AND
     // applicable equality deletes (the rewritten files get a NEW add
     // version, past every existing delete's seq, so carrying the lines
-    // for them would silently stop applying); deletes for kept files are
-    // consolidated/carried below
+    // for them would silently stop applying); [[publishRewrite]] keeps
+    // the deletes of kept files
     val live = readLive(spark, dir, raw, small)
     val sortCols = sortOrderOf(dir)
       .filter(c => live.columns.exists(_.equalsIgnoreCase(c)))
@@ -3196,29 +3301,6 @@ class VersionedTableOps(protected val io: TableIO) {
           .write.parquet(batchDir)
       case None => live.coalesce(numOut).write.parquet(batchDir)
     }
-    val newFiles = io.list(batchDir).filter(_.endsWith(".parquet")).sorted
-      .map(n => s"$batchDir/$n")
-    // delete rows still referencing KEPT files survive, consolidated into
-    // one vector — compaction is also delete-vector maintenance
-    val survivorDel: Seq[String] =
-      if (delsAtStart.isEmpty) Seq.empty
-      else {
-        val keptSet = headFiles.filterNot(smallSet).toSet
-        val survivors = readDelVectors(spark, delsAtStart)
-          .filter(col("file_path").isInCollection(
-            if (keptSet.isEmpty) Seq("") else keptSet.toSeq))
-        val sDir = s"$dir/deletes/${java.util.UUID.randomUUID}"
-        survivors.coalesce(1).write.parquet(sDir)
-        val out = io.list(sDir).filter(_.endsWith(".parquet")).sorted
-          .map(n => s"$sDir/$n")
-        // emptiness from the footers (driver-local) — re-reading the
-        // just-written vector was one extra Spark job per rewrite
-        if (footerRowCounts(spark, out).values.sum == 0L) {
-          io.list(sDir).foreach(n => io.delete(s"$sDir/$n"))
-          io.delete(sDir)
-          Seq.empty
-        } else out
-      }
     // explicit statCols let the maintenance pass ADD pruning metadata to
     // a landing that never collected it (commitOnce streams don't);
     // otherwise inherit whatever columns the head already tracks — and a
@@ -3227,60 +3309,8 @@ class VersionedTableOps(protected val io: TableIO) {
     val cols =
       ((if (statCols.nonEmpty) statCols else statColsOf(dir, head)) ++
         sortCols ++ zorder.toSeq.flatMap(_._1)).distinct
-    val phys = physOf(live)
-    val newStats =
-      if (cols.isEmpty) rowsLines(spark, newFiles)
-      else statsLines(spark, dir, newFiles, cols, cbo = cboOnCommit(dir),
-        known = Some(phys))
-    val delRows = rowsLines(spark, survivorDel)
-    // old vectors are replaced by the consolidated survivor — their rows
-    // lines drop with the rewritten data files' (segment-preserving
-    // carry: untouched segments ride verbatim, O(affected) metadata)
-    val removed = smallSet ++ delsAtStart
-    val newSeg = segLine(dir, newFiles, coversOf(newStats))
-    val newStatsSeg = segLine(dir, newStats ++ delRows)
-    var carried: Seq[String] = Seq.empty
-    var dropped: Map[String, Long] = Map.empty
-    var headAt: Option[Int] = None
-    val v = publishOnHeadRaw(dir,
-        guardFiles = newFiles ++ survivorDel) { h =>
-      // a delete that lands mid-compact references files this rewrite has
-      // already copied WITHOUT it — carrying the new vector would half-apply
-      // it, dropping it would resurrect rows; fail loudly, caller retries
-      if (h.toSeq.flatMap(delFilesOf(dir, _)).toSet != delsAtStart.toSet)
-        throw new SnapshotShapeConflict(
-          "delete vectors changed during compaction; re-run compact " +
-            "against the new head")
-      if (h.toSeq.flatMap(eqDelsOf(dir, _)).toSet != eqsAtStart.toSet)
-        throw new SnapshotShapeConflict(
-          "equality deletes changed during compaction; re-run compact " +
-            "against the new head")
-      headAt = h
-      val (c, dr) = carrySidecarExcept(dir, h, removed)
-      carried = c; dropped = dr
-      // equality deletes were materialized into the rewrite; a line
-      // survives only while it still APPLIES to a kept file (otherwise
-      // it would linger forever and keep expire refusing)
-      val kept = h.map(filesOf(dir, _)).getOrElse(Seq.empty)
-        .filterNot(smallSet)
-      val keptAdded = addedAtOf(dir, kept)
-      val liveEq = eqsAtStart.filter { case (s, _, _) =>
-        kept.exists(f => keptAdded.getOrElse(f, 0) < s)
-      }
-      // carry the head's txn ledger forward but stamp our OWN wall clock —
-      // the compacted snapshot is a new commit, not a re-dating of the old
-      h.toSeq.flatMap(metaOf(dir, _)).filter(_.startsWith("#txn=")) ++
-        Seq(s"#ts=${now()}") ++
-        survivorDel.map(f => s"#del=$f") ++
-        liveEq.map { case (s, c2, p) => s"#eqdel=$s\t$c2\t$p" } ++
-        carryManifestExcept(dir, h, removed, smallSet,
-          if (newFiles.isEmpty) Seq.empty else Seq(phys)) ++ newSeg
-    }
-    io.writeLines(statsPath(dir, v),
-      rewriteHeader(dir, headAt, smallSet, delsAtStart.toSet, dropped,
-        sumRows(newStats), sumRows(delRows)) ++
-        carried ++ newStatsSeg)
-    v
+    publishRewrite(spark, dir, "compaction", "re-run compact", head, raw,
+      smallSet, parquetIn(batchDir), physOf(live), cols)
   }
 
   /** Metadata-only COUNT(*): the live row count folded from the manifest
@@ -3710,51 +3740,14 @@ class VersionedTableOps(protected val io: TableIO) {
     val head = vs.last
     val raw = rawManifest(dir, head)
     val rewrite = filesIn(raw)
-    val rewriteSet = rewrite.toSet
-    val delsAtStart = delsIn(raw)
-    val eqsAtStart = eqDelsIn(raw)
     val batchDir = s"$dir/data/${java.util.UUID.randomUUID}"
     // live view of the WHOLE head: positional vectors anti-joined,
     // equality deletes applied — the rewrite materializes them all
     val live = readLive(spark, dir, raw, rewrite)
     Layout.writeZordered(live, zCols, batchDir, numFiles, bitsPerDim)
-    val phys = physOf(live)
-    val newFiles = io.list(batchDir).filter(_.endsWith(".parquet")).sorted
-      .map(n => s"$batchDir/$n")
-    val cols = (statColsOf(dir, head) ++ zCols).distinct
-    val newStats = statsLines(spark, dir, newFiles, cols,
-      cbo = cboOnCommit(dir), known = Some(phys))
-    // the superseded delete vectors' rows lines drop with the rewrite
-    // (their rows were materialized into the clustered copy)
-    val removed = rewriteSet ++ delsAtStart
-    val newSeg = segLine(dir, newFiles, coversOf(newStats))
-    val newStatsSeg = segLine(dir, newStats, coversOf(newStats))
-    var carried: Seq[String] = Seq.empty
-    var dropped: Map[String, Long] = Map.empty
-    var headAt: Option[Int] = None
-    val v = publishOnHeadRaw(dir, guardFiles = newFiles) { h =>
-      if (h.toSeq.flatMap(delFilesOf(dir, _)).toSet != delsAtStart.toSet)
-        throw new SnapshotShapeConflict(
-          "delete vectors changed during optimizeZorder; re-run against " +
-            "the new head")
-      if (h.toSeq.flatMap(eqDelsOf(dir, _)).toSet != eqsAtStart.toSet)
-        throw new SnapshotShapeConflict(
-          "equality deletes changed during optimizeZorder; re-run " +
-            "against the new head")
-      headAt = h
-      val (c, dr) = carrySidecarExcept(dir, h, removed)
-      carried = c; dropped = dr
-      // concurrent appends (files beyond our rewrite set) survive as-is
-      h.toSeq.flatMap(metaOf(dir, _)).filter(_.startsWith("#txn=")) ++
-        Seq(s"#ts=${now()}") ++
-        carryManifestExcept(dir, h, removed, rewriteSet,
-          if (newFiles.isEmpty) Seq.empty else Seq(phys)) ++ newSeg
-    }
-    io.writeLines(statsPath(dir, v),
-      rewriteHeader(dir, headAt, rewriteSet, delsAtStart.toSet, dropped,
-        sumRows(newStats), 0L) ++
-        carried ++ newStatsSeg)
-    v
+    publishRewrite(spark, dir, "optimizeZorder", "re-run", head, raw,
+      rewrite.toSet, parquetIn(batchDir), physOf(live),
+      (statColsOf(dir, head) ++ zCols).distinct)
   }
 
   /** MERGE (upsert) `source` into the table by `key` — copy-on-write
@@ -3784,8 +3777,7 @@ class VersionedTableOps(protected val io: TableIO) {
     * append rides through the retry untouched. Returns the new version. */
   def merge(spark: SparkSession, dir: String, source: DataFrame,
             key: String, txnId: Option[String] = None): Int =
-    applyChanges(spark, dir, source, source.limit(0).select(col(key)),
-      key, txnId)
+    mergeBatch(spark, dir, source, key, None, txnId)
 
   /** CDC changelog apply — [[merge]] plus row deletes, in ONE commit: the
     * change batch carries an op column (`"u"` upsert / `"d"` delete), and
@@ -3798,100 +3790,94 @@ class VersionedTableOps(protected val io: TableIO) {
     * upserted and deleted. */
   def mergeChanges(spark: SparkSession, dir: String, changes: DataFrame,
                    key: String, opCol: String = "op",
-                   txnId: Option[String] = None): Int = {
-    // ONE aggregate pass validates the whole batch — the former shape ran
-    // THREE full passes before any merge work (bad-op scan, duplicate-key
-    // groupBy, upsert∩delete semi-join), each with its own shuffle. A
-    // per-key rollup computes all three verdicts, plus the key span and
-    // upsert count [[applyChanges]] would otherwise re-derive with two
-    // more jobs. The batch is persisted so validation, the u/d splits and
-    // the merge's membership scan share one materialization.
+                   txnId: Option[String] = None): Int =
+    mergeBatch(spark, dir, changes, key, Some(opCol), txnId)
+
+  /** What the one validation pass ([[precheck]]) proved and derived about
+    * a merge batch: keys are unique and none is both upserted and deleted;
+    * `span` is the affected-key [min, max] (None = no non-null key) and
+    * `hasUpserts` says whether any row lands. */
+  private case class ChangePrecheck(hasUpserts: Boolean,
+                                    span: Option[(Any, Any)])
+
+  /** ONE aggregate pass validates a merge batch — bad ops, duplicate keys
+    * and upsert∩delete are three verdicts of one per-key rollup, which
+    * also yields the key span and the upsert count the rewrite needs.
+    * `opCol` None: every row is an upsert. */
+  private def precheck(batch: DataFrame, key: String,
+                       opCol: Option[String]): ChangePrecheck = {
     // A NULL op makes `!isin("u","d")` evaluate to NULL (filtered out),
     // which would let the row pass validation and then silently match
     // neither the upsert nor the delete branch — count "not a definite
     // match" instead so malformed rows fail loudly rather than vanish.
-    val ch = changes.persist()
-    try {
-      // internal aliases carry an unlikely prefix so a user key column
-      // literally named "nu"/"nd"/"nbad" can't make the second aggregate's
-      // references ambiguous (AnalysisException the per-check shape never
-      // hit)
-      val r = ch.groupBy(col(key)).agg(
-          count(when(col(opCol) === "u", lit(1))).as("__graft_nu"),
-          count(when(col(opCol) === "d", lit(1))).as("__graft_nd"),
-          count(when(!coalesce(col(opCol).isin("u", "d"), lit(false)),
-            lit(1))).as("__graft_nbad"))
-        .agg(sum(col("__graft_nbad")).as("bad"),
-          max(col("__graft_nu")).as("maxu"),
-          count(when(col("__graft_nu") > 0 && col("__graft_nd") > 0,
-            lit(1))).as("both"),
-          sum(col("__graft_nu")).as("urows"),
-          min(col(key)).as("kmin"), max(col(key)).as("kmax"))
-        .head()
-      val empty = r.isNullAt(0)
-      require(empty || r.getLong(0) == 0,
-        s"op column '$opCol' must be 'u' or 'd' (non-null)")
-      require(empty || r.getLong(1) <= 1,
-        s"source has duplicate '$key' values — a MERGE with a " +
-          s"many-to-one match is ambiguous; dedupe the source first")
-      require(empty || r.getLong(2) == 0,
-        s"a '$key' value is both upserted and deleted in one batch — " +
-          s"fold the changelog to last-change-per-key first")
-      val pre = ChangePrecheck(
-        hasUpserts = !empty && r.getLong(3) > 0,
-        // all-NULL keys aggregate to a null kmin: carry span = None (the
-        // old inline path's isNullAt guard) — a (null, null) span would
-        // make mayIntersect keep EVERY head file as a candidate where the
-        // old shape scanned none
-        span = if (empty || r.isNullAt(4)) None
-          else Some((r.get(4), r.get(5))))
-      applyChangesPre(spark, dir,
-        ch.filter(col(opCol) === "u").drop(opCol),
-        ch.filter(col(opCol) === "d").select(col(key)),
-        key, txnId, Some(pre))
-    } finally ch.unpersist()
+    // Internal aliases carry an unlikely prefix so a user key column
+    // literally named "nu"/"nd"/"nbad" can't make the second aggregate's
+    // references ambiguous.
+    val op = opCol.fold(lit("u"))(col)
+    val r = batch.groupBy(col(key)).agg(
+        count(when(op === "u", lit(1))).as("__graft_nu"),
+        count(when(op === "d", lit(1))).as("__graft_nd"),
+        count(when(!coalesce(op.isin("u", "d"), lit(false)),
+          lit(1))).as("__graft_nbad"))
+      .agg(sum(col("__graft_nbad")).as("bad"),
+        max(col("__graft_nu")).as("maxu"),
+        count(when(col("__graft_nu") > 0 && col("__graft_nd") > 0,
+          lit(1))).as("both"),
+        sum(col("__graft_nu")).as("urows"),
+        min(col(key)).as("kmin"), max(col(key)).as("kmax"))
+      .head()
+    val empty = r.isNullAt(0)
+    require(empty || r.getLong(0) == 0,
+      s"op column '${opCol.mkString}' must be 'u' or 'd' (non-null)")
+    require(empty || r.getLong(1) <= 1,
+      s"source has duplicate '$key' values — a MERGE with a " +
+        s"many-to-one match is ambiguous; dedupe the source first")
+    require(empty || r.getLong(2) == 0,
+      s"a '$key' value is both upserted and deleted in one batch — " +
+        s"fold the changelog to last-change-per-key first")
+    ChangePrecheck(
+      hasUpserts = !empty && r.getLong(3) > 0,
+      // all-NULL keys aggregate to a null kmin: no span — a (null, null)
+      // span would make mayIntersect keep EVERY head file as a candidate
+      span = if (empty || r.isNullAt(4)) None else Some((r.get(4), r.get(5))))
   }
 
-  /** Batch facts [[mergeChanges]] already proved/derived in its one-pass
-    * validation, so [[applyChangesAttempt]] skips re-deriving them:
-    * uniqueness/disjointness hold, `span` is the affected-key [min,max]
-    * (None = empty batch), `hasUpserts` replaces an `isEmpty` probe. */
-  private case class ChangePrecheck(hasUpserts: Boolean,
-                                    span: Option[(Any, Any)])
-
-  /** Core of [[merge]]/[[mergeChanges]]: upsert `upserts` and delete
-    * `deleteKeys` by `key`, rewriting ONLY the files that contain an
-    * affected key. With `txnId`, the commit is exactly-once: an already
-    * committed transaction returns its version without reading anything
-    * (the manifest ledger is the replay marker, as in [[commitOnce]]). */
-  def applyChanges(spark: SparkSession, dir: String, upserts: DataFrame,
-                   deleteKeys: DataFrame, key: String,
-                   txnId: Option[String] = None): Int =
-    applyChangesPre(spark, dir, upserts, deleteKeys, key, txnId, None)
-
-  private def applyChangesPre(spark: SparkSession, dir: String,
-                   upserts: DataFrame, deleteKeys: DataFrame, key: String,
-                   txnId: Option[String],
-                   pre: Option[ChangePrecheck]): Int =
+  /** Core of [[merge]]/[[mergeChanges]]: upsert and delete by `key`,
+    * rewriting ONLY the files that contain an affected key. With `txnId`,
+    * the commit is exactly-once: an already committed transaction returns
+    * its version without reading anything (the manifest ledger is the
+    * replay marker, as in [[commitOnce]]). The batch is persisted so
+    * validation, the u/d splits and the rewrite share one
+    * materialization. */
+  private def mergeBatch(spark: SparkSession, dir: String, batch: DataFrame,
+                         key: String, opCol: Option[String],
+                         txnId: Option[String]): Int =
     if (txnId.exists(committedTxns(dir).contains))
       versionOfTxn(dir, txnId.get)
     else {
-      val v = retryingShape(3) { applyChangesAttempt(spark, dir, upserts,
-        deleteKeys, key, txnId, pre) }
-      maybeAutoRefresh(spark, dir)
-      v
+      val ch = batch.persist()
+      try {
+        val pre = precheck(ch, key, opCol)
+        val (upserts, deleteKeys) = opCol match {
+          case Some(o) => (ch.filter(col(o) === "u").drop(o),
+            ch.filter(col(o) === "d").select(col(key)))
+          case None => (ch, ch.limit(0).select(col(key)))
+        }
+        val v = retryingShape(3) { mergeBatchAttempt(spark, dir, upserts,
+          deleteKeys, key, txnId, pre) }
+        maybeAutoRefresh(spark, dir)
+        v
+      } finally ch.unpersist()
     }
 
-  private def applyChangesAttempt(spark: SparkSession, dir: String,
+  private def mergeBatchAttempt(spark: SparkSession, dir: String,
                    upserts: DataFrame, deleteKeys: DataFrame, key: String,
-                   txnId: Option[String],
-                   pre: Option[ChangePrecheck] = None): Int = {
+                   txnId: Option[String], pre: ChangePrecheck): Int = {
     val vs = versions(dir)
     require(vs.nonEmpty, s"no committed version at $dir")
     val head = vs.last
     val raw = rawManifest(dir, head)
     val filesAtStart = filesIn(raw)
-    val delsAtStart = delsIn(raw)
     val mergePin = physSchemaOf(dir, raw)
     // the rewrite's candidate selection and survivor logic reason about
     // per-file row liveness; layering era-scoped equality deletes under
@@ -3899,166 +3885,97 @@ class VersionedTableOps(protected val io: TableIO) {
     require(eqDelsIn(raw).isEmpty,
       s"$dir carries unmaterialized equality deletes; run compact() to " +
         s"fold them into the data files before MERGE")
+    // every key the batch affects, for file-touching and row removal
+    val affectedKeys = upserts.select(col(key)).unionByName(deleteKeys)
+    val touched = filesWithKeys(spark, dir, head, raw, mergePin, key,
+      affectedKeys, pre.span)
+    // rewrite = surviving rows of touched files (minus every affected
+    // key: updated rows are replaced, deleted rows just end here) + the
+    // upserts; a no-match batch rewrites nothing and lands the upserts
+    // as a plain new file, in the table's column order (schema-only
+    // read, no data scanned)
+    val tableCols = mergePin
+      .getOrElse(scan(spark, Seq(filesAtStart.head), None).schema)
+      .fieldNames
+    val rewritten =
+      if (touched.isEmpty) upserts.select(tableCols.map(col).toSeq: _*)
+      else readFiles(spark, touched, delsIn(raw), mergePin)
+        .join(affectedKeys, Seq(key), "left_anti")
+        .unionByName(upserts)
+        .select(tableCols.map(col).toSeq: _*)
+    publishRewrite(spark, dir, "merge", "re-run", head, raw, touched.toSet,
+      landMerged(spark, dir, rewritten, touched.size,
+        touched.nonEmpty || pre.hasUpserts),
+      physOf(rewritten), statColsOf(dir, head), txnId,
+      mergeConflicts(spark, dir, filesAtStart, key, affectedKeys,
+        bySource = false))
+  }
 
-    val src = upserts.persist()
-    val delK = deleteKeys.select(col(key)).persist()
-    try {
-      // a [[ChangePrecheck]] means [[mergeChanges]] already proved
-      // uniqueness/disjointness and derived the key span in its ONE
-      // validation pass — re-running the groupBy + semi-join + min/max
-      // here would be three redundant jobs per merge
-      if (pre.isEmpty) {
-        val dupes = src.groupBy(col(key)).count()
-          .filter(col("count") > 1).limit(1).count()
-        require(dupes == 0,
-          s"source has duplicate '$key' values — a MERGE with a " +
-            s"many-to-one match is ambiguous; dedupe the source first")
-        require(src.select(col(key)).join(delK, Seq(key), "left_semi")
-          .limit(1).count() == 0,
-          s"a '$key' value is both upserted and deleted in one batch — " +
-            s"fold the changelog to last-change-per-key first")
-      }
-      // every key the batch affects, for file-touching and row removal
-      val affectedKeys = src.select(col(key)).unionByName(delK)
-
-      // phase 1 (free): manifest stats — files whose key range can't
-      // intersect the batch's key range are out before any data is read
-      val span = pre.map(_.span).getOrElse {
-        val r = affectedKeys.agg(min(col(key)), max(col(key))).head()
-        if (r.isNullAt(0)) None else Some((r.get(0), r.get(1)))
-      }
-      val candidates = span match {
-        case None => Seq.empty[String]
-        case Some((lo, hi)) =>
-          val stats = statsOf(dir, head, key)
-          filesAtStart.filter { f =>
-            stats.get(f).forall(mayIntersect(_, lo, hi))
-          }
-      }
-      // phase 2 (one scan of the candidates): actual membership — the
-      // distinct files a semi-join against the affected keys names;
-      // bounded collect (≤ file count)
-      val touched: Seq[String] =
+  /** The files of version `head` (raw manifest `raw`, schema pin `pin`)
+    * holding a key of `keys` (one column, named `key`), in two phases,
+    * each a superset of the next: manifest stats drop the files whose
+    * range misses `span` (the keys' [min, max]; None = no key) without
+    * reading data, then ONE semi-join scan of the live rows of the rest
+    * names the files that hold a key (a collect bounded by file count). */
+  private def filesWithKeys(spark: SparkSession, dir: String, head: Int,
+      raw: Seq[String], pin: Option[StructType], key: String,
+      keys: DataFrame, span: Option[(Any, Any)]): Seq[String] =
+    span match {
+      case None => Seq.empty
+      case Some((lo, hi)) =>
+        val stats = statsOf(dir, head, key)
+        val candidates = filesIn(raw).filter { f =>
+          stats.get(f).forall(mayIntersect(_, lo, hi))
+        }
         if (candidates.isEmpty) Seq.empty
-        else taggedLive(spark, candidates, delsAtStart, mergePin)
-          .join(affectedKeys, Seq(key), "left_semi")
+        else taggedLive(spark, candidates, delsIn(raw), pin)
+          .join(keys, Seq(key), "left_semi")
           .select("__graft_file").distinct()
           .collect().map(_.getString(0)).toSeq
-      val touchedSet = touched.toSet
+    }
 
-      // rewrite = surviving rows of touched files (minus every affected
-      // key: updated rows are replaced, deleted rows just end here) + the
-      // upserts; a no-match batch rewrites nothing and lands the upserts
-      // as a plain new file, in the table's column order (schema-only
-      // read, no data scanned)
+  /** Land a merge's rewritten `rows`: the table's file granularity kept —
+    * ~one file per touched file (a shuffle-free merge of read
+    * partitions), ONE file for a pure-insert merge, none without rows —
+    * then checked against the table's CHECK constraints. */
+  private def landMerged(spark: SparkSession, dir: String, rows: DataFrame,
+                         touched: Int, hasRows: Boolean): Seq[String] =
+    if (!hasRows) Seq.empty
+    else {
       val batchDir = s"$dir/data/${java.util.UUID.randomUUID}"
-      val tableCols = mergePin
-        .getOrElse(scan(spark, Seq(filesAtStart.head), None).schema)
-        .fieldNames
-      val rewritten =
-        if (touched.isEmpty) src.select(tableCols.map(col).toSeq: _*)
-        else readFiles(spark, touched, delsAtStart, mergePin)
-          .join(affectedKeys, Seq(key), "left_anti")
-          .unionByName(src)
-          .select(tableCols.map(col).toSeq: _*)
-      // keep the table's file granularity: the rewrite replaces N files
-      // with ~N (shuffle-free merge of read partitions), and a pure-insert
-      // merge lands ONE file, not one per source partition
-      val hasRows = touched.nonEmpty ||
-        pre.map(_.hasUpserts).getOrElse(!src.isEmpty)
-      val newFiles =
-        if (!hasRows) Seq.empty[String]
-        else {
-          rewritten.coalesce(math.max(1, touched.size))
-            .write.parquet(batchDir)
-          val fs = io.list(batchDir).filter(_.endsWith(".parquet")).sorted
-            .map(n => s"$batchDir/$n")
-          validateConstraints(spark, dir, fs)
-          fs
-        }
+      rows.coalesce(math.max(1, touched)).write.parquet(batchDir)
+      val fs = parquetIn(batchDir)
+      validateConstraints(spark, dir, fs)
+      fs
+    }
 
-      // vectors referencing kept files survive (their rows are still
-      // dead); vectors for touched files were materialized by the rewrite
-      val survivorDel: Seq[String] =
-        if (delsAtStart.isEmpty || touchedSet.isEmpty) delsAtStart
-        else {
-          val keptSet = filesAtStart.filterNot(touchedSet).toSet
-          val survivors = readDelVectors(spark, delsAtStart)
-            .filter(col("file_path").isInCollection(
-              if (keptSet.isEmpty) Seq("") else keptSet.toSeq))
-          val sDir = s"$dir/deletes/${java.util.UUID.randomUUID}"
-          survivors.coalesce(1).write.parquet(sDir)
-          val out = io.list(sDir).filter(_.endsWith(".parquet")).sorted
-            .map(n => s"$sDir/$n")
-          // emptiness from the footers (driver-local) — re-reading the
-          // just-written vector was one extra Spark job per rewrite
-          if (footerRowCounts(spark, out).values.sum == 0L) {
-            io.list(sDir).foreach(n => io.delete(s"$sDir/$n"))
-            io.delete(sDir)
-            Seq.empty
-          } else out
-        }
-
-      val cols = statColsOf(dir, head)
-      val added = if (newFiles.isEmpty) Seq.empty else Seq(physOf(rewritten))
-      // new data files: full stats when the head tracks columns (the scan
-      // also yields their rows lines), plain footer counts otherwise; the
-      // (possibly rewritten) survivor vector records its count too
-      val newStats =
-        if (newFiles.isEmpty) Seq.empty
-        else if (cols.isEmpty) rowsLines(spark, newFiles)
-        else statsLines(spark, dir, newFiles, cols, cbo = cboOnCommit(dir),
-          known = added.headOption)
-      val delRows = rowsLines(spark, survivorDel)
-      val removed = touchedSet ++ delsAtStart
-      val newSeg = segLine(dir, newFiles, coversOf(newStats))
-      val newStatsSeg = segLine(dir, newStats ++ delRows)
-      var carried: Seq[String] = Seq.empty
-      var dropped: Map[String, Long] = Map.empty
-      var headAt: Option[Int] = None
-      publishOnHeadTxn(dir, txnId,
-          guardFiles = newFiles ++ survivorDel) { h =>
-        if (h.toSeq.flatMap(delFilesOf(dir, _)).toSet != delsAtStart.toSet)
-          throw new SnapshotShapeConflict(
-            "delete vectors changed during merge; re-run against the " +
-              "new head")
-        if (h.toSeq.flatMap(eqDelsOf(dir, _)).nonEmpty)
-          throw new java.util.ConcurrentModificationException(
-            "an equality delete landed during merge; compact, then " +
-              "re-run against the new head")
-        // serializable write-conflict validation: files appended since the
-        // merge's snapshot must not contain an affected key — our rewrite
-        // was computed without them, so a hit would double (or revive) it
-        val appended = h.map(filesOf(dir, _)).getOrElse(Seq.empty)
-          .filterNot(filesAtStart.toSet)
-        if (appended.nonEmpty &&
-          spark.read.parquet(appended: _*).select(col(key))
-            .join(affectedKeys, Seq(key), "left_semi").limit(1).count() > 0)
-          throw new java.util.ConcurrentModificationException(
-            "a concurrent append landed rows matching a merge source " +
-              "key; re-run the merge against the new head")
-        headAt = h
-        val (c, dr) = carrySidecarExcept(dir, h, removed)
-        carried = c; dropped = dr
-        h.toSeq.flatMap(metaOf(dir, _)).filter(_.startsWith("#txn=")) ++
-          txnId.map(t => s"#txn=$t").toSeq ++
-          Seq(s"#ts=${now()}") ++
-          survivorDel.map(f => s"#del=$f") ++
-          carryManifestExcept(dir, h, removed, touchedSet, added) ++ newSeg
-      } match {
-        case Left(existing) =>
-          // a LIVE writer carrying the same txn won the race (the entry
-          // ledger check is only the replay fast path): nothing of ours
-          // published — the rewritten files are orphan-sweep debris
-          existing
-        case Right(v) =>
-          io.writeLines(statsPath(dir, v),
-            rewriteHeader(dir, headAt, touchedSet, delsAtStart.toSet,
-              dropped, sumRows(newStats), sumRows(delRows)) ++
-              carried ++ newStatsSeg)
-          v
-      }
-    } finally { src.unpersist(); delK.unpersist() }
+  /** A merge's own checks on the fresh OCC head (raw manifest `hRaw`):
+    * an equality delete that landed mid-merge, and files appended since
+    * `filesAtStart` that hold a key of `keys` (one column, named `key`) —
+    * serializable write-conflict validation: the rewrite was computed
+    * without them, so a hit would double (or revive) that key. Under
+    * BY-SOURCE clauses every append conflicts: they quantify over every
+    * target row. The appended files read pinned to the head's schema. */
+  private def mergeConflicts(spark: SparkSession, dir: String,
+      filesAtStart: Seq[String], key: String, keys: DataFrame,
+      bySource: Boolean)(hRaw: Seq[String]): Unit = {
+    if (eqDelsIn(hRaw).nonEmpty)
+      throw new java.util.ConcurrentModificationException(
+        "an equality delete landed during merge; compact, then " +
+          "re-run against the new head")
+    val appended = filesIn(hRaw).filterNot(filesAtStart.toSet)
+    if (appended.nonEmpty) {
+      if (bySource)
+        throw new SnapshotShapeConflict(
+          "a concurrent append landed during a BY-SOURCE merge " +
+            "(which quantifies over every target row); re-running " +
+            "against the new head")
+      if (scan(spark, appended, physSchemaOf(dir, hRaw)).select(col(key))
+        .join(keys, Seq(key), "left_semi").limit(1).count() > 0)
+        throw new java.util.ConcurrentModificationException(
+          "a concurrent append landed rows matching a merge source " +
+            "key; re-run the merge against the new head")
+    }
   }
 
   /** Full-clause MERGE — the CDC shapes [[merge]]'s single-key upsert
@@ -4076,14 +3993,14 @@ class VersionedTableOps(protected val io: TableIO) {
     * Unassigned columns carry the target value through an UPDATE; an
     * INSERT must assign every table column.
     *
-    * Scale shape: without BY-SOURCE clauses this is [[applyChanges]]'s
+    * Scale shape: without BY-SOURCE clauses this is [[merge]]'s
     * file-scoped rewrite — manifest stats prune candidate files by the
     * source key range, one membership semi-join names the touched
     * files, and ONLY those rewrite (plus one appended file for
     * surviving inserts). BY-SOURCE clauses quantify over every target
     * row by definition, so they rewrite the whole head — that cost is
     * the semantics, not the implementation; the commit is still one
-    * atomic publish. OCC mirrors [[applyChanges]]: concurrent vector
+    * atomic publish. OCC mirrors [[merge]]: concurrent vector
     * changes, equality deletes, and appends carrying affected keys (or
     * ANY append, under BY-SOURCE) abort loudly and auto-retry bounded
     * against the new head. Unmaterialized equality deletes refuse at
@@ -4124,11 +4041,7 @@ class VersionedTableOps(protected val io: TableIO) {
     val bySource = notMatchedBySource.nonEmpty
     val src = source.persist()
     try {
-      val dupes = src.groupBy(col(sourceKey)).count()
-        .filter(col("count") > 1).limit(1).count()
-      require(dupes == 0,
-        s"source has duplicate '$sourceKey' values — a MERGE with a " +
-          s"many-to-one match is ambiguous; dedupe the source first")
+      val pre = precheck(src, sourceKey, None)
       val updPin = physSchemaOf(dir, raw)
       val tschema = updPin
         .getOrElse(scan(spark, Seq(filesAtStart.head), None).schema)
@@ -4158,27 +4071,12 @@ class VersionedTableOps(protected val io: TableIO) {
       }
 
       // touched files: every file under BY-SOURCE quantification, else
-      // stats-pruned candidates narrowed by one membership semi-join
-      val touched: Seq[String] =
+      // the files holding a source key
+      val srcKeys = src.select(col(sourceKey).as(targetKey))
+      val touched =
         if (bySource) filesAtStart
-        else {
-          val r = src.agg(min(col(sourceKey)), max(col(sourceKey))).head()
-          val candidates =
-            if (r.isNullAt(0)) Seq.empty[String]
-            else {
-              val stats = statsOf(dir, head, targetKey)
-              filesAtStart.filter { f =>
-                stats.get(f).forall(mayIntersect(_, r.get(0), r.get(1)))
-              }
-            }
-          if (candidates.isEmpty) Seq.empty
-          else taggedLive(spark, candidates, delsAtStart, updPin)
-            .join(src.select(col(sourceKey).as(targetKey)),
-              Seq(targetKey), "left_semi")
-            .select("__graft_file").distinct()
-            .collect().map(_.getString(0)).toSeq
-        }
-      val touchedSet = touched.toSet
+        else filesWithKeys(spark, dir, head, raw, updPin, targetKey, srcKeys,
+          pre.span)
 
       // the joined frame: live target rows of touched files as __t_*,
       // source rows as __s_*, presence markers on both sides
@@ -4237,98 +4135,12 @@ class VersionedTableOps(protected val io: TableIO) {
           .cast(tschema(c).dataType).as(c)
       }
       val rewritten = joined.filter(keep).select(tcols.map(outCol): _*)
-
-      val batchDir = s"$dir/data/${java.util.UUID.randomUUID}"
-      val hasRows = touched.nonEmpty || !src.isEmpty
-      val newFiles =
-        if (!hasRows) Seq.empty[String]
-        else {
-          rewritten.coalesce(math.max(1, touched.size))
-            .write.parquet(batchDir)
-          val fs = io.list(batchDir).filter(_.endsWith(".parquet")).sorted
-            .map(n => s"$batchDir/$n")
-          validateConstraints(spark, dir, fs)
-          fs
-        }
-
-      // vectors referencing kept files survive, consolidated; vectors for
-      // touched files were materialized by the rewrite
-      val survivorDel: Seq[String] =
-        if (delsAtStart.isEmpty || touchedSet.isEmpty) delsAtStart
-        else {
-          val keptSet = filesAtStart.filterNot(touchedSet).toSet
-          val survivors = readDelVectors(spark, delsAtStart)
-            .filter(col("file_path").isInCollection(
-              if (keptSet.isEmpty) Seq("") else keptSet.toSeq))
-          val sDir = s"$dir/deletes/${java.util.UUID.randomUUID}"
-          survivors.coalesce(1).write.parquet(sDir)
-          val out = io.list(sDir).filter(_.endsWith(".parquet")).sorted
-            .map(n => s"$sDir/$n")
-          // emptiness from the footers (driver-local) — re-reading the
-          // just-written vector was one extra Spark job per rewrite
-          if (footerRowCounts(spark, out).values.sum == 0L) {
-            io.list(sDir).foreach(n => io.delete(s"$sDir/$n"))
-            io.delete(sDir)
-            Seq.empty
-          } else out
-        }
-
-      val cols = statColsOf(dir, head)
-      val added = if (newFiles.isEmpty) Seq.empty else Seq(physOf(rewritten))
-      val newStats =
-        if (newFiles.isEmpty) Seq.empty
-        else if (cols.isEmpty) rowsLines(spark, newFiles)
-        else statsLines(spark, dir, newFiles, cols, cbo = cboOnCommit(dir),
-          known = added.headOption)
-      val delRows = rowsLines(spark, survivorDel)
-      val removed = touchedSet ++ delsAtStart
-      val newSeg = segLine(dir, newFiles, coversOf(newStats))
-      val newStatsSeg = segLine(dir, newStats ++ delRows)
-      var carried: Seq[String] = Seq.empty
-      var dropped: Map[String, Long] = Map.empty
-      var headAt: Option[Int] = None
-      val v = publishOnHeadRaw(dir,
-          guardFiles = newFiles ++ survivorDel) { h =>
-        if (h.toSeq.flatMap(delFilesOf(dir, _)).toSet != delsAtStart.toSet)
-          throw new SnapshotShapeConflict(
-            "delete vectors changed during merge; re-run against the " +
-              "new head")
-        if (h.toSeq.flatMap(eqDelsOf(dir, _)).nonEmpty)
-          throw new java.util.ConcurrentModificationException(
-            "an equality delete landed during merge; compact, then " +
-              "re-run against the new head")
-        val appended = h.map(filesOf(dir, _)).getOrElse(Seq.empty)
-          .filterNot(filesAtStart.toSet)
-        if (appended.nonEmpty) {
-          // under BY-SOURCE every target row is quantified over — any
-          // concurrent append invalidates the rewrite; otherwise only
-          // appends carrying an affected (source) key conflict
-          if (bySource)
-            throw new SnapshotShapeConflict(
-              "a concurrent append landed during a BY-SOURCE merge " +
-                "(which quantifies over every target row); re-running " +
-                "against the new head")
-          if (spark.read.parquet(appended: _*)
-            .select(col(targetKey))
-            .join(src.select(col(sourceKey).as(targetKey)),
-              Seq(targetKey), "left_semi").limit(1).count() > 0)
-            throw new java.util.ConcurrentModificationException(
-              "a concurrent append landed rows matching a merge source " +
-                "key; re-run the merge against the new head")
-        }
-        headAt = h
-        val (c, dr) = carrySidecarExcept(dir, h, removed)
-        carried = c; dropped = dr
-        h.toSeq.flatMap(metaOf(dir, _)).filter(_.startsWith("#txn=")) ++
-          Seq(s"#ts=${now()}") ++
-          survivorDel.map(f => s"#del=$f") ++
-          carryManifestExcept(dir, h, removed, touchedSet, added) ++ newSeg
-      }
-      io.writeLines(statsPath(dir, v),
-        rewriteHeader(dir, headAt, touchedSet, delsAtStart.toSet, dropped,
-          sumRows(newStats), sumRows(delRows)) ++
-          carried ++ newStatsSeg)
-      v
+      publishRewrite(spark, dir, "merge", "re-run", head, raw, touched.toSet,
+        landMerged(spark, dir, rewritten, touched.size,
+          touched.nonEmpty || pre.hasUpserts),
+        physOf(rewritten), statColsOf(dir, head),
+        onHead = mergeConflicts(spark, dir, filesAtStart, targetKey, srcKeys,
+          bySource))
     } finally { src.unpersist(); () }
   }
 
@@ -4341,12 +4153,14 @@ class VersionedTableOps(protected val io: TableIO) {
     * the range breaks that equivalence and this FAILS LOUDLY (the caller
     * falls back to a snapshot diff — [[graft.analytics.TableDiff]]) —
     * silently returning rewritten rows as "new" would corrupt every
-    * incremental consumer downstream. */
+    * incremental consumer downstream. The rows read pinned to
+    * `toVersion`'s schema ([[physSchemaOf]]). */
   def readChanges(spark: SparkSession, dir: String,
                   fromVersion: Int, toVersion: Int): DataFrame = {
     val added = changedFiles(dir, fromVersion, toVersion)
     if (added.isEmpty) read(spark, dir, Some(toVersion)).limit(0)
-    else spark.read.parquet(added: _*)
+    else scan(spark, added,
+      physSchemaOf(dir, rawManifest(dir, toVersion)))
   }
 
   /** The files APPENDED between `fromVersion` (exclusive) and
@@ -4363,20 +4177,20 @@ class VersionedTableOps(protected val io: TableIO) {
       s"versions [$fromVersion, $toVersion] not both in $vs")
     require(fromVersion <= toVersion,
       s"fromVersion $fromVersion > toVersion $toVersion")
-    val from = filesOf(dir, fromVersion).toSet
-    val to = filesOf(dir, toVersion)
+    val fromRaw = rawManifest(dir, fromVersion)
+    val toRaw = rawManifest(dir, toVersion)
+    val from = filesIn(fromRaw).toSet
+    val to = filesIn(toRaw)
     val removed = from -- to.toSet
     require(removed.isEmpty,
       s"non-append lineage between v$fromVersion and v$toVersion " +
         s"(${removed.size} file(s) removed — overwrite/rollback/compaction " +
         s"in range); incremental reads are only sound over pure appends")
-    require(delFilesOf(dir, fromVersion).toSet ==
-      delFilesOf(dir, toVersion).toSet,
+    require(delsIn(fromRaw).toSet == delsIn(toRaw).toSet,
       s"delete vectors changed between v$fromVersion and v$toVersion — " +
         s"rows were REMOVED, not just appended; incremental reads are only " +
         s"sound over pure appends (fall back to a snapshot diff)")
-    require(eqDelsOf(dir, fromVersion).toSet ==
-      eqDelsOf(dir, toVersion).toSet,
+    require(eqDelsIn(fromRaw).toSet == eqDelsIn(toRaw).toSet,
       s"equality deletes changed between v$fromVersion and v$toVersion — " +
         s"rows were REMOVED, not just appended; incremental reads are only " +
         s"sound over pure appends (fall back to a snapshot diff)")

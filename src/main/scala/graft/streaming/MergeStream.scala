@@ -17,7 +17,7 @@ import graft.sinks.VersionedTable
   *   rewrites only the files containing them (stats-pruned + membership
   *   -confirmed), never the table;
   * - **exactly-once under replay**: the `queryName:batchId` transaction id
-  *   rides in the manifest ([[VersionedTable.applyChanges]]), so a batch
+  *   rides in the manifest ([[VersionedTable.mergeChanges]]), so a batch
   *   redelivered after a crash between merge and checkpoint commit
   *   returns the already-committed version instead of re-merging;
   * - **in-batch ordering**: a real changelog can carry several changes for

@@ -5,22 +5,16 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.sql.GraftCatalog
 
-/** Spark jobs per lake operation on a committed, undeclared table: the
-  * `#schema=` manifest header pins every engine read, so no operation
-  * samples a footer to learn the table's schema (a one-task Spark job per
-  * inference), and the per-operation job counts stay pinned. */
-class LakeJobCountSpec extends SparkSpec {
-  private val vt = VersionedTable
-
+object LakeJobCountSpec {
   /** One started job: its short call site (`collect at …`) and the
     * outermost Spark method on the caller's stack. */
-  private final case class Job(name: String, entry: String) {
+  final case class Job(name: String, entry: String) {
     /** A schema inference: the job was started by a reader resolving its
       * schema (`DataFrameReader.parquet` without a schema, or a file
       * table's `schema`), not by an action or a write. */
@@ -31,7 +25,7 @@ class LakeJobCountSpec extends SparkSpec {
   /** The jobs `body` runs, in start order. A marker job after `body`
     * closes the window: listener events arrive in order, so once the
     * marker's start is seen every earlier start has been too. */
-  private def jobsOf(body: => Unit): Seq[Job] = {
+  def jobsOf(spark: SparkSession)(body: => Unit): Seq[Job] = {
     val marker = "lake-job-count-marker"
     val jobs = new ConcurrentLinkedQueue[Job]()
     val closed = new CountDownLatch(1)
@@ -57,6 +51,19 @@ class LakeJobCountSpec extends SparkSpec {
     } finally sc.removeSparkListener(l)
     jobs.asScala.toSeq
   }
+}
+
+/** Spark jobs per lake operation on a committed, undeclared table: the
+  * `#schema=` manifest header pins every engine read, so no operation
+  * samples a footer to learn the table's schema (a one-task Spark job per
+  * inference), and the per-operation job counts stay pinned. */
+class LakeJobCountSpec extends SparkSpec {
+  import LakeJobCountSpec.Job
+
+  private val vt = VersionedTable
+
+  private def jobsOf(body: => Unit): Seq[Job] =
+    LakeJobCountSpec.jobsOf(spark)(body)
 
   private def rows(lo: Long, n: Long): DataFrame =
     spark.range(lo, lo + n).select(col("id").as("event_id"),
@@ -117,6 +124,21 @@ class LakeJobCountSpec extends SparkSpec {
     assert(ops("scan").size <= 2, describe(ops("scan")))
     assert(ops("lookup").size <= 1, describe(ops("lookup")))
     assert(ops("delete").size <= 2, describe(ops("delete")))
+  }
+
+  test("readChanges reads pinned to the header; a stripped table infers") {
+    val dir = tmpDir("lake-changes")
+    vt.commit(rows(0, 2000), dir)
+    val from = vt.versions(dir).last
+    vt.commit(rows(2000, 100), dir)
+    def changes(): Seq[Job] = jobsOf {
+      assert(vt.readChanges(spark, dir, from, from + 1).count() == 100)
+    }
+    val pinned = changes()
+    assert(!pinned.exists(_.infers), describe(pinned))
+    SchemaHeaderSpec.strip(dir)
+    val stripped = changes()
+    assert(stripped.exists(_.infers), describe(stripped))
   }
 
   test("a table written without headers still infers, op by op") {

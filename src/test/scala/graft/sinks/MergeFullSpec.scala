@@ -127,12 +127,16 @@ class MergeFullSpec extends SparkSpec {
     ops.commit(spark.range(0, 5).select(col("id"), col("id").as("v")), dir)
     val dup = spark.range(0, 2).select(col("id"), col("id").as("v"))
       .unionAll(spark.range(0, 1).select(col("id"), col("id").as("v")))
-    val e = intercept[IllegalArgumentException] {
-      ops.mergeInto(spark, dir, dup, "id", "id",
+    // the key-only merges refuse with the identical message
+    val messages = Seq[() => Int](
+      () => ops.mergeInto(spark, dir, dup, "id", "id",
         matched = Seq(MergeClause(None,
           MergeUpdate(Map("v" -> col("__s_v"))))),
-        notMatched = Seq.empty)
-    }
-    assert(e.getMessage.contains("duplicate"))
+        notMatched = Seq.empty),
+      () => ops.merge(spark, dir, dup, "id"),
+      () => ops.mergeChanges(spark, dir, dup.withColumn("op", lit("u")), "id")
+    ).map(m => intercept[IllegalArgumentException](m()).getMessage)
+    assert(messages.head.contains("duplicate"))
+    assert(messages.distinct.size == 1, messages)
   }
 }

@@ -75,12 +75,42 @@ class MergeSpec extends SparkSpec {
   test("duplicate source keys fail loudly, before anything is written") {
     val dir = tmpDir("mg-dupes")
     ops.commit(table(0, 100), dir)
-    val e = intercept[IllegalArgumentException] {
-      ops.merge(spark, dir,
-        Seq((1L, 10L), (1L, 20L)).toDF("id", "payload"), "id")
-    }
-    assert(e.getMessage.contains("duplicate"))
+    val src = Seq((1L, 10L), (1L, 20L)).toDF("id", "payload")
+    // every merge entry point refuses through the one validation pass
+    val messages = Seq[() => Int](
+      () => ops.merge(spark, dir, src, "id"),
+      () => ops.mergeChanges(spark, dir, src.withColumn("op", lit("u")),
+        "id"),
+      () => ops.mergeInto(spark, dir, src, "id", "id",
+        matched = Seq(MergeClause(None,
+          MergeUpdate(Map("payload" -> col("__s_payload"))))),
+        notMatched = Seq.empty)
+    ).map(m => intercept[IllegalArgumentException](m()).getMessage)
+    assert(messages.head.contains("duplicate"))
+    assert(messages.distinct.size == 1, messages)
     assert(ops.versions(dir) == Seq(1))
+  }
+
+  test("merge runs no more Spark jobs than mergeChanges of the same " +
+    "upserts") {
+    val (a, b) = (tmpDir("mg-jobs-merge"), tmpDir("mg-jobs-changes"))
+    Seq(a, b).foreach(d => ops.commitClustered(table(0, 4000), d,
+      zCols = Seq("id"), statCols = Seq("id"), numFiles = 4))
+    val ups = spark.range(0, 50)
+      .select(col("id"), (col("id") * 100).as("payload"))
+      .unionByName(spark.range(9000, 9010)
+        .select(col("id"), (col("id") * 2).as("payload")))
+    val viaMerge = LakeJobCountSpec.jobsOf(spark) {
+      ops.merge(spark, a, ups, "id"); ()
+    }
+    val viaChanges = LakeJobCountSpec.jobsOf(spark) {
+      ops.mergeChanges(spark, b, ups.withColumn("op", lit("u")), "id"); ()
+    }
+    assert(viaMerge.size <= viaChanges.size,
+      s"merge ${viaMerge.map(_.name)} vs mergeChanges " +
+        s"${viaChanges.map(_.name)}")
+    val got = ops.read(spark, a)
+    assert(got.count() == 4010 && got.exceptAll(ops.read(spark, b)).isEmpty)
   }
 
   test("a NULL op in a change batch fails loudly, not silently dropped") {
