@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal, XxHash64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.graft.GraftExpressions.{column, expression}
-import org.apache.spark.sql.types.BinaryType
 
 /** Bloom-filter pre-filtered joins: cut the big side of a shuffle join down
   * to (approximately) the rows that can match BEFORE the shuffle moves them.
@@ -20,25 +19,24 @@ import org.apache.spark.sql.types.BinaryType
   * (q_bloom_join hash-matches the plain-join oracle). False negatives are
   * impossible by the bloom contract.
   *
-  * This is the manual, composable twin of Spark's own runtime filter
-  * injection (`spark.sql.optimizer.runtime.bloomFilter.enabled`, which
-  * plants the same BloomFilterAggregate/BloomFilterMightContain pair behind
-  * a scalar subquery when stats justify it). The explicit form exists for
-  * when the optimizer can't see the opportunity: the build side hides
-  * behind an aggregate or a non-deterministic curation step, the probe is
-  * reused across several queries, or the filter should be built once and
-  * shipped to a different job entirely (the returned bytes are just the
-  * serialized `org.apache.spark.util.sketch.BloomFilter`).
+  * The filter is built inside the query, in the shape Spark's own runtime
+  * filter injection plants (`InjectRuntimeFilter`, SPARK-32268): the
+  * build side's BloomFilterAggregate sits behind a non-correlated scalar
+  * subquery that BloomFilterMightContain probes. Building the DataFrame
+  * runs no job; the action runs the subquery once, before the probe stage.
+  * The plan carries a subquery reference, never the filter's bytes, so the
+  * plan text, AQE plan updates and the SQL status store stay small however
+  * large the filter is. The explicit form exists for when the optimizer
+  * can't see the opportunity: the build side hides behind an aggregate or
+  * a non-deterministic curation step, or stats don't justify injection.
   *
-  * Scale shape: the bloom itself is bounded driver/model state — sizing is
-  * the standard m = -n·ln(p)/ln²2, i.e. ~1.2 MB per 10⁶ keys at 1% fpp —
-  * and the build is a full map-side-combining aggregate (each partition
-  * builds a local filter; merge is bitwise OR), so the build-side keys
-  * shuffle only as already-merged filter blobs, never as rows. For build
-  * sides beyond ~10⁸ keys prefer the optimizer's subquery form (the blob
-  * stops being driver-friendly) or raise
-  * `spark.sql.optimizer.runtime.bloomFilter.maxNumBits`, which also clamps
-  * the explicit aggregate here.
+  * Scale shape: the bloom itself is bounded driver state — sizing is the
+  * standard m = -n·ln(p)/ln²2, i.e. ~1.2 MB per 10⁶ keys at 1% fpp — and
+  * the build is a full map-side-combining aggregate (each partition builds
+  * a local filter; merge is bitwise OR), so the build-side keys shuffle
+  * only as already-merged filter blobs, never as rows. Past
+  * `spark.sql.optimizer.runtime.bloomFilter.maxNumBits` the filter is
+  * clamped ([[optimalNumBits]]): its fpp degrades, its results do not.
   */
 object BloomJoin {
 
@@ -53,33 +51,28 @@ object BloomJoin {
     math.max(64L, math.ceil(-expectedItems * math.log(fpp) / ln2sq).toLong)
   }
 
-  /** Build a bloom filter over `key` of `build` (xxhash64-hashed, the same
-    * family Spark's runtime filters use). Returns the serialized filter, or
-    * null when the build side is empty — [[mightContain]] of a null filter
-    * is null, so a pre-filter on it keeps nothing, which is exactly the
-    * inner/semi-join semantics of an empty build side. */
-  def buildBloom(build: DataFrame, key: Column, expectedItems: Long,
-                 fpp: Double = 0.01): Array[Byte] = {
-    val agg = new BloomFilterAggregate(
+  /** Aggregate: the serialized bloom filter over `key`, null over no rows. */
+  private[operators] def bloomOf(key: Column, expectedItems: Long,
+                                 fpp: Double): Column =
+    column(new BloomFilterAggregate(
       new XxHash64(Seq(expression(key))),
       Literal(expectedItems),
-      Literal(optimalNumBits(expectedItems, fpp))).toAggregateExpression()
-    build.select(column(agg).as("bloom")).head().getAs[Array[Byte]](0)
-  }
-
-  /** Predicate: `key` might be in `bloom`. Map-side, codegen'd, no shuffle.
-    * Null for a null filter (empty build side) — null filters out. */
-  def mightContain(bloom: Array[Byte], key: Column): Column =
-    column(BloomFilterMightContain(
-      Literal(bloom, BinaryType), new XxHash64(Seq(expression(key)))))
+      Literal(optimalNumBits(expectedItems, fpp))).toAggregateExpression())
+      .as("bloom")
 
   /** `big` reduced to rows whose `bigKey` might match a `buildKey`. The
     * superset-of-matches contract means any exact join/aggregate downstream
-    * is unchanged; only the shuffle volume shrinks. */
+    * is unchanged; only the shuffle volume shrinks. Keys hash with
+    * xxhash64, the family Spark's runtime filters use. An empty build side
+    * aggregates to a null filter, and a null filter keeps nothing — the
+    * inner/semi-join semantics of an empty build side. */
   def preFilter(big: DataFrame, bigKey: Column,
                 build: DataFrame, buildKey: Column,
-                expectedItems: Long, fpp: Double = 0.01): DataFrame =
-    big.filter(mightContain(buildBloom(build, buildKey, expectedItems, fpp), bigKey))
+                expectedItems: Long, fpp: Double = 0.01): DataFrame = {
+    val bloom = build.select(bloomOf(buildKey, expectedItems, fpp)).scalar()
+    big.filter(column(BloomFilterMightContain(
+      expression(bloom), new XxHash64(Seq(expression(bigKey))))))
+  }
 
   /** Exact inner equi-join with the big side bloom-pre-filtered. Identical
     * results to `big.join(build, bigKey === buildKey)` for any fpp. */

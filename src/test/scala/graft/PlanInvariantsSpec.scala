@@ -9,14 +9,10 @@ class PlanInvariantsSpec extends SparkSpec {
 
   /** Executed (AQE-final) plans: under adaptive execution the pre-execution
     * tree is the INITIAL plan — codegen collapse and runtime join changes
-    * only appear after the query actually runs, so run each query (sf0.001,
-    * cheap) and read the materialized plan. */
-  private lazy val plans: Map[String, String] =
-    SparkEntry.queries.map { case (name, fn) =>
-      val df = fn(spark, sf)
-      df.collect()
-      name -> df.queryExecution.executedPlan.toString
-    }
+    * only appear after the query actually runs (sf0.001, cheap, once per
+    * JVM in [[QuerySurface]]). */
+  private def plans: Map[String, String] =
+    QuerySurface(spark, sf).map { case (name, e) => name -> e.plan }
 
   test("no query plans a cartesian product") {
     val offenders = plans.collect {
@@ -43,5 +39,14 @@ class PlanInvariantsSpec extends SparkSpec {
     val offenders = counts.filter(_._2 > 12)
     assert(offenders.isEmpty,
       s"shuffle-heavy plans: $offenders (worst ok: ${counts.maxBy(_._2)})")
+  }
+
+  test("no executed plan's text exceeds 1 MB (plan-size canary)") {
+    // a plan that embeds data (a literal filter, a collected side) prints it
+    // in every plan string, AQE update and SQL status-store entry
+    val sizes = plans.map { case (n, p) => n -> p.length }
+    val offenders = sizes.filter(_._2 > (1 << 20))
+    assert(offenders.isEmpty,
+      s"oversized plans: $offenders (largest: ${sizes.maxBy(_._2)})")
   }
 }

@@ -1,0 +1,28 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** The whole driver query surface, executed once per test JVM. Each entry
+  * holds a query's executed (AQE-final) plan text and its collected row
+  * count; every suite that asserts a property of every query reads this
+  * map instead of running the surface again. Under adaptive execution the
+  * final plan only exists after the query runs, and its text prints the
+  * Final and the Initial plan, so a plan property checked here covers both.
+  */
+object QuerySurface {
+
+  final case class Executed(plan: String, rows: Long)
+
+  private var executed: Map[String, Executed] = _
+
+  def apply(spark: SparkSession, sf: String): Map[String, Executed] =
+    synchronized {
+      if (executed == null)
+        executed = SparkEntry.queries.map { case (name, fn) =>
+          val df = fn(spark, sf)
+          val rows = df.collect().length.toLong
+          name -> Executed(df.queryExecution.executedPlan.toString, rows)
+        }
+      executed
+    }
+}

@@ -2,31 +2,43 @@ package graft.operators
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.analytics.ScaleOps
 import graft.sources.Tables
 
 class BloomJoinSpec extends SparkSpec {
   import spark.implicits._
 
-  private def shuffleBytesOf(body: => Unit): Long = {
-    val bytes = new AtomicLong(0L)
-    val l = new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null)
-          bytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    }
+  /** `counter` after `body` runs with `l` registered — listener delivery is
+    * async, so settle until the counter stops moving. */
+  private def settled(counter: AtomicLong, l: SparkListener)(body: => Unit): Long = {
     spark.sparkContext.addSparkListener(l)
     try {
       body
-      // listener delivery is async — settle until the counter stops moving
-      var prev = -1L; var cur = bytes.get()
-      while (cur != prev) { Thread.sleep(30); prev = cur; cur = bytes.get() }
+      var prev = -1L; var cur = counter.get()
+      while (cur != prev) { Thread.sleep(30); prev = cur; cur = counter.get() }
     } finally spark.sparkContext.removeSparkListener(l)
-    bytes.get()
+    counter.get()
+  }
+
+  private def shuffleBytesOf(body: => Unit): Long = {
+    val bytes = new AtomicLong(0L)
+    settled(bytes, new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          bytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    })(body)
+  }
+
+  private def jobsOf(body: => Unit): Long = {
+    val jobs = new AtomicLong(0L)
+    settled(jobs, new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    })(body)
   }
 
   test("bloomJoin result is identical to the plain join (superset contract)") {
@@ -48,18 +60,19 @@ class BloomJoinSpec extends SparkSpec {
     // so this is the worst case: the filter keeps nearly everything,
     // but must never drop a true match
     val keys = Tables.orders(spark, sf).select(col("o_orderkey"))
-    val bloom = BloomJoin.buildBloom(keys, col("o_orderkey"),
-      expectedItems = 1, fpp = 0.5) // → 64 bits
-    val survivors = keys.filter(BloomJoin.mightContain(bloom, col("o_orderkey")))
+    assert(BloomJoin.optimalNumBits(1, 0.5) == 64)
+    val survivors = BloomJoin.preFilter(keys, col("o_orderkey"),
+      keys, col("o_orderkey"), expectedItems = 1, fpp = 0.5) // → 64 bits
     assert(survivors.count() == keys.count())
   }
 
   test("empty build side → null bloom → pre-filter keeps nothing") {
     val empty = Tables.orders(spark, sf).filter(lit(false))
-    val bloom = BloomJoin.buildBloom(empty, col("o_orderkey"), 100, 0.01)
-    assert(bloom == null)
+    assert(empty.select(BloomJoin.bloomOf(col("o_orderkey"), 100, 0.01))
+      .head().isNullAt(0))
     val li = Tables.lineitem(spark, sf)
-    assert(li.filter(BloomJoin.mightContain(bloom, col("l_orderkey"))).isEmpty)
+    assert(BloomJoin.preFilter(li, col("l_orderkey"),
+      empty, col("o_orderkey"), 100, 0.01).isEmpty)
   }
 
   test("pre-filter cuts the big side's shuffle under a sort-merge join") {
@@ -95,5 +108,31 @@ class BloomJoinSpec extends SparkSpec {
         .queryExecution.executedPlan.toString
       assert(bloomedPlan.contains("might_contain"), bloomedPlan.take(2000))
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
+  test("building a bloomJoin or preFilter DataFrame starts no Spark job") {
+    val urgent = Tables.orders(spark, sf)
+      .filter(col("o_orderpriority") === "1-URGENT")
+      .select(col("o_orderkey"), col("o_orderdate"))
+    val li = Tables.lineitem(spark, sf)
+      .select(col("l_orderkey"), col("l_extendedprice"))
+    // the filter is built by the action, inside the query
+    val jobs = jobsOf {
+      BloomJoin.preFilter(li, col("l_orderkey"), urgent, col("o_orderkey"),
+        expectedItems = 10000, fpp = 0.01)
+      BloomJoin.bloomJoin(li, col("l_orderkey"), urgent, col("o_orderkey"),
+        expectedItems = 10000, fpp = 0.01)
+    }
+    assert(jobs == 0, s"$jobs jobs started while building the DataFrames")
+  }
+
+  test("q_bloom_join's query execution text stays under 64 KB") {
+    // a 2^20-key filter is ~1.26 MB; the plan must reference it, not print it
+    val df = ScaleOps.qBloomJoin(spark, sf)
+    val before = df.queryExecution.toString.length
+    assert(before < 64 * 1024, s"$before chars before execution")
+    df.collect()
+    val after = df.queryExecution.toString.length
+    assert(after < 64 * 1024, s"$after chars after execution")
   }
 }
