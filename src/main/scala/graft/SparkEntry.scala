@@ -6,7 +6,7 @@ import graft.ext.{Curation, DedupCluster, DedupIndex, DedupOps, LangModel, LineD
 import graft.operators.AsOf
 import graft.sources.TableStream
 import graft.pipeline.WeatherQueries
-import graft.sinks.{Bucketing, IncrementalView, SchemaEvolution, VersionedTable}
+import graft.sinks.{Bucketing, IncrementalView, LakeQueries, SchemaEvolution}
 import graft.sql.{Mview, SqlQueries}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -34,7 +34,7 @@ object SparkEntry {
       SimilarityIvfPq.defs ++
       SemDedup.defs ++ Quantize.defs ++
       Multimodal.defs ++ Bucketing.defs ++ SchemaEvolution.defs ++
-      VersionedTable.defs ++ IncrementalView.defs ++ TableStream.defs ++
+      LakeQueries.defs ++ IncrementalView.defs ++ TableStream.defs ++
       SqlQueries.defs ++ Mview.defs ++
       AsOf.defs ++ Map(
       "q_weather_transform" -> (WeatherQueries.qTransform _),
@@ -57,7 +57,7 @@ object SparkEntry {
       SimilarityIvf.oracles ++ SimilarityPq.oracles ++
       SimilarityIvfPq.oracles ++
       Multimodal.oracles ++ Bucketing.oracles ++ SchemaEvolution.oracles ++
-      VersionedTable.oracles ++ IncrementalView.oracles ++ TableStream.oracles ++
+      LakeQueries.oracles ++ IncrementalView.oracles ++ TableStream.oracles ++
       SqlQueries.oracles ++ Mview.oracles ++
       AsOf.oracles ++ WeatherQueries.oracles
 

@@ -2,8 +2,6 @@ package graft.core
 
 import java.io.FileNotFoundException
 
-import scala.collection.mutable.ArrayBuffer
-
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -21,9 +19,7 @@ import org.apache.spark.sql.types.StructType
   * build side the anti-join broadcasts, so the landed table is never
   * shuffled. The flat layout anti-joins those key columns directly: a date
   * IN list over a string cast of `utc` is not a filter parquet can push
-  * down, so on a flat directory it would prune no IO. Date pruning lives in
-  * the partitioned layout ([[graft.sinks.LandedTable]]), where the batch's
-  * dates select whole `utc_date` partitions.
+  * down, so on a flat directory it would prune no IO.
   * [[graft.streaming.WeatherStream]] is the bounded-state streaming variant.
   */
 object WeatherDedup {
@@ -51,7 +47,7 @@ object WeatherDedup {
     * semantics of the reference's COUNT(*)==0 gate (weather_etl.py:158–168).
     * For a left_anti hash join Spark builds (and may broadcast) the right
     * side, so the existing side should be only the key columns — see
-    * [[appendImpl]]. */
+    * [[idempotentAppend]]. */
   def newRowsOnly(batch: DataFrame, existing: DataFrame): DataFrame =
     batch.join(existing.select(WeatherSchema.key.map(col): _*),
       WeatherSchema.key, "left_anti")
@@ -64,56 +60,26 @@ object WeatherDedup {
     * is. The batch is evaluated once — the fetch behind it runs once per
     * landing. */
   def idempotentAppend(spark: SparkSession, batch: DataFrame,
-                       tablePath: String): Long =
-    appendImpl(spark, dedupWithinBatch(batch), tablePath,
-      partitionCol = None)
-
-  /** Shared core for the flat ([[idempotentAppend]]) and partitioned
-    * ([[graft.sinks.LandedTable]]) layouts. `batch` is already
-    * in-batch-deduped; when `partitionCol` is set the batch must carry that
-    * date column, the existing-side read prunes to the batch's dates through
-    * it, and the write partitions by it. Either way the batch is evaluated
-    * exactly once: the partitioned date list comes from a cache the
-    * anti-join then reads. */
-  private[graft] def appendImpl(spark: SparkSession, rawBatch: DataFrame,
-                                tablePath: String,
-                                partitionCol: Option[String]): Long = {
+                       tablePath: String): Long = {
     // A NULL logical key can never satisfy the at-most-one-row-per-(city,
     // utc) invariant: the anti-join never matches NULLs, so such a row
     // would re-append on every replay. Drop them — the reference itself
     // could never land one (its transform crashes first, weather_etl.py:125).
-    val batch = rawBatch.filter(
+    val deduped = dedupWithinBatch(batch).filter(
       WeatherSchema.key.map(col(_).isNotNull).reduce(_ && _))
-    val cached = ArrayBuffer.empty[DataFrame]
-    def cache(df: DataFrame): DataFrame = { cached += df; df.cache() }
+    val fresh =
+      if (!tableExists(spark, tablePath)) deduped
+      else newRowsOnly(deduped, spark.read
+        .schema(StructType(WeatherSchema.key.map(deduped.schema(_))))
+        .parquet(tablePath))
+    // One shot: count+write from a cached plan so the append is consistent
+    // with the reported count even if the source is re-evaluated.
+    val materialized = fresh.cache()
     try {
-      val fresh =
-        if (!tableExists(spark, tablePath)) batch
-        else {
-          val keyCols = WeatherSchema.key ++ partitionCol
-          val existing = spark.read
-            .schema(StructType(keyCols.map(batch.schema(_))))
-            .parquet(tablePath)
-          partitionCol match {
-            case None => newRowsOnly(batch, existing)
-            case Some(c) =>
-              // Bounded driver-side collect: micro-batches span few distinct
-              // dates, and a non-null utc gives a non-null date.
-              val staged = cache(batch)
-              val dates = staged.select(c).distinct().collect().map(_.getDate(0))
-              newRowsOnly(staged, existing.filter(col(c).isin(dates: _*)))
-          }
-        }
-      // One shot: count+write from a cached plan so the append is consistent
-      // with the reported count even if the source is re-evaluated.
-      val materialized = cache(fresh)
       val n = materialized.count()
-      if (n > 0) {
-        val w = materialized.write.mode(SaveMode.Append)
-        partitionCol.fold(w)(c => w.partitionBy(c)).parquet(tablePath)
-      }
+      if (n > 0) materialized.write.mode(SaveMode.Append).parquet(tablePath)
       n
-    } finally cached.reverseIterator.foreach(_.unpersist())
+    } finally materialized.unpersist()
   }
 
   /** True when `path` holds at least one entry that is not Spark or Hadoop

@@ -5,7 +5,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions._
 
 import graft.analytics.Parity
-import graft.sinks.VersionedTable
+import graft.sinks.{LakeQueries, VersionedTable}
 import graft.sources.Tables
 
 /** The SQL front door's DRIVER QUERY definitions — every `q_sql_*`
@@ -1585,7 +1585,7 @@ object SqlQueries {
         |GROUP BY event_type
         |ORDER BY event_type""".stripMargin,
     // the CALL drives the exact q_change_feed surface — shared oracle
-    "q_sql_change_feed" -> VersionedTable.oracles("q_change_feed"),
+    "q_sql_change_feed" -> LakeQueries.oracles("q_change_feed"),
     "q_sql_spj" ->
       """WITH b AS (SELECT event_id, value * 2 AS boost FROM events
         |           WHERE event_id % 3 = 0)

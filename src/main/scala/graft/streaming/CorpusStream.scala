@@ -47,8 +47,7 @@ object CorpusStream {
     * duplicate — the same exactly-once-by-key discipline as
     * [[WeatherStream.writerWithMerge]]. The guard reads only the landed
     * doc_id column (column-pruned); at scale, partition the output by
-    * ingest date and prune the guard to the replay horizon the same way
-    * [[graft.sinks.LandedTable]] date-prunes its dup check. */
+    * ingest date and prune the guard to the replay horizon. */
   def landBatch(batch: DataFrame, evalDocs: DataFrame, outPath: String,
                 minQuality: Double): Unit = {
     val survivors = curateBatch(batch, evalDocs, minQuality)

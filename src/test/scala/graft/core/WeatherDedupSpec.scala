@@ -30,6 +30,18 @@ class WeatherDedupSpec extends SparkSpec {
     assert(df.select("city", "utc").distinct().count() == 3)
   }
 
+  test("idempotentAppend: null-key rows are excluded; " +
+      "replays stay idempotent") {
+    val path = tmpDir("weather-nullkey")
+    // permissive mode on a doc with no dt → null utc
+    val docs = Seq("""{"name":"NoTime","main":{"temp":1.0}}""",
+      WeatherFixtures.marseille)
+    val batch = WeatherTransform(docs.toDF("value"), strict = false)
+    assert(WeatherDedup.idempotentAppend(spark, batch, path) == 1)
+    assert(WeatherDedup.idempotentAppend(spark, batch, path) == 0)
+    assert(spark.read.parquet(path).count() == 1)
+  }
+
   test("dedupWithinBatch: winner is deterministic under any physical order") {
     // two rows, same (city, utc) key, different payloads — the winner must
     // not depend on row order or partitioning

@@ -6,13 +6,11 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue,
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.util.LongAccumulator
 
 import graft.SparkSpec
-import graft.core.{WeatherFixtures, WeatherTransform}
-import graft.sinks.LandedTable
+import graft.core.WeatherFixtures
 import graft.sources.RestWeatherSource
 
 object WeatherEtlJobSpec {
@@ -166,24 +164,16 @@ class WeatherEtlJobSpec extends SparkSpec {
     names.asScala.toSeq
   }
 
-  /** The two landings of raw documents: flat and partitioned layout. */
-  private val layouts: Seq[(String, (DataFrame, String) => Long)] = Seq(
-    "flat" -> ((raw, p) => WeatherEtlJob.runBatch(spark, raw, p)),
-    "partitioned" -> ((raw, p) =>
-      LandedTable.append(spark, WeatherTransform(raw), p)))
-
   test("a landing onto an existing table fetches each listed city once") {
-    for ((layout, land) <- layouts) {
-      val path = tmpDir(s"once-$layout")
-      val cities = (1 to 8).map(i => s"Once$i")
-      land(docs(cities.take(4).map(doc(_, Day1))), path)
-      val calls = spark.sparkContext.longAccumulator("fetches")
-      val raw = RestWeatherSource.loadMany(spark, cities, cfg, Counting(calls),
-        parallelism = 4)
-      assert(land(raw, path) == 4, layout)
-      assert(calls.value == cities.size,
-        s"$layout: ${calls.value} fetches for ${cities.size} cities")
-    }
+    val path = tmpDir("once")
+    val cities = (1 to 8).map(i => s"Once$i")
+    WeatherEtlJob.runBatch(spark, docs(cities.take(4).map(doc(_, Day1))), path)
+    val calls = spark.sparkContext.longAccumulator("fetches")
+    val raw = RestWeatherSource.loadMany(spark, cities, cfg, Counting(calls),
+      parallelism = 4)
+    assert(WeatherEtlJob.runBatch(spark, raw, path) == 4)
+    assert(calls.value == cities.size,
+      s"${calls.value} fetches for ${cities.size} cities")
   }
 
   test("runBatch onto an existing flat table runs no footer-inference job") {
@@ -206,16 +196,14 @@ class WeatherEtlJobSpec extends SparkSpec {
     // The table already holds each city's Day2 key. A second evaluation of
     // the batch would see Day2 while the first saw Day1: only one evaluation
     // may decide both what is new and what lands.
-    for ((layout, land) <- layouts) {
-      val path = tmpDir(s"drift-$layout")
-      val city = s"Drift-$layout"
-      land(docs(Seq(doc(city, Day2))), path)
-      val n = land(RestWeatherSource.loadMany(spark, Seq(city), cfg, Drifting),
-        path)
-      val t = spark.read.parquet(path)
-      assert(t.groupBy("city", "utc").count().filter(col("count") > 1).isEmpty,
-        s"$layout: a key landed twice")
-      assert(n == 1 && t.count() == 2, s"$layout: appended $n")
-    }
+    val path = tmpDir("drift")
+    val city = "Drift"
+    WeatherEtlJob.runBatch(spark, docs(Seq(doc(city, Day2))), path)
+    val n = WeatherEtlJob.runBatch(spark,
+      RestWeatherSource.loadMany(spark, Seq(city), cfg, Drifting), path)
+    val t = spark.read.parquet(path)
+    assert(t.groupBy("city", "utc").count().filter(col("count") > 1).isEmpty,
+      "a key landed twice")
+    assert(n == 1 && t.count() == 2, s"appended $n")
   }
 }

@@ -158,8 +158,7 @@ class SegmentCoverSpec extends SparkSpec {
       statCols = Seq("id", "s"), numFiles = 2)
     val lo = ""
     val hi = "􏿿" // U+10FFFF
-    val got = ops.prunedReadAll(spark, dir, Seq(("s", lo, hi)),
-        Some(v))
+    val got = ops.prunedRead(spark, dir, "s", lo, hi, Some(v))
       .filter(col("s") >= lit(lo) && col("s") <= lit(hi)).collect()
     assert(got.map(_.getLong(0)).toSeq == Seq(1L),
       s"cover fold dropped the matching segment: ${got.mkString(",")}")

