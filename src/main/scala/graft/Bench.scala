@@ -1,8 +1,7 @@
 package graft
-import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graft.Workspace
 
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR, forcing full execution through the noop sink (count()
@@ -15,29 +14,17 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // Cumulative shuffle-write bytes across all tasks; per-query deltas are
-    // taken around each timed run. Listener delivery is async — deltas are
-    // read after a short settle loop.
-    val shuffleBytes = new AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null)
-          shuffleBytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
-    def settledShuffleBytes(): Long = {
-      var prev = -1L; var cur = shuffleBytes.get()
-      while (cur != prev) { Thread.sleep(30); prev = cur; cur = shuffleBytes.get() }
-      cur
+    val spark = Profile.session()
+    // One timed execution through the noop sink: its seconds and the MB
+    // its tasks wrote to shuffle. The recording's marker job runs after
+    // the clock stops.
+    def timedRun(df: => DataFrame): (Double, Double) = {
+      val (sec, rec) = Profile.recording(spark) {
+        val t0 = System.nanoTime()
+        df.write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      }
+      (sec, rec.shuffleWriteBytes / 1e6)
     }
     // Warm the JVM + file cache on the smallest table so the first measured
     // query doesn't absorb session bring-up.
@@ -93,22 +80,18 @@ object Bench {
       .sortBy(_._1).map { case (name, fn) =>
       var lastShuffleMb = -1.0
       var maxLoad = -1.0
-      def timeOnce(): Double = {
-        // settle BEFORE starting the clock — the settle loop always sleeps
-        // at least once and must not be billed to the query
-        val s0 = settledShuffleBytes()
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          val sec = (System.nanoTime() - t0) / 1e9
-          lastShuffleMb = (settledShuffleBytes() - s0) / 1e6
+      // one workspace scope per run: what the query landed is deleted
+      // after the clock stops and its shuffle bytes are read
+      def timeOnce(): Double =
+        try Workspace.scoped(spark) {
+          val (sec, mb) = timedRun(fn(spark, sfDir))
+          lastShuffleMb = mb
           maxLoad = math.max(maxLoad, loadAvg1m())
           sec
         } catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           -1.0
         }
-      }
       var times = (1 to benchRuns).map(_ => timeOnce())
       // stolen-run auto-rerun: each extra quiet run pulls the median back
       // toward the min; a persistent divergence is real machine load
@@ -147,24 +130,17 @@ object Bench {
     // that predicts 100 TB serving, which the end-to-end q_* total hides
     // behind its in-query artifact build. Neither extra entry counts
     // toward the driver's round-over-round total.
+    // One workspace scope holds the artifact for its build and its serves.
     val artifactResults = BenchArtifacts.splits.toSeq.sortBy(_._1)
       .flatMap { case (name, split) =>
-        try {
+        try Workspace.scoped(spark) {
           val b0 = System.nanoTime()
           val handle = split.build(spark, sfDir)
           val buildSec = (System.nanoTime() - b0) / 1e9
-          var serveMb = -1.0
-          val times = (1 to benchRuns).map { _ =>
-            val s0 = settledShuffleBytes()
-            val t0 = System.nanoTime()
-            split.serve(spark, sfDir, handle)
-              .write.format("noop").mode("overwrite").save()
-            val sec = (System.nanoTime() - t0) / 1e9
-            serveMb = (settledShuffleBytes() - s0) / 1e6
-            sec
-          }
+          val runs = (1 to benchRuns).map(_ =>
+            timedRun(split.serve(spark, sfDir, handle)))
           Seq((s"${name}_build", buildSec, -1.0),
-            (s"${name}_serve", times.min, serveMb))
+            (s"${name}_serve", runs.map(_._1).min, runs.last._2))
         } catch { case e: Throwable =>
           System.err.println(s"[bench] ${name}_serve failed: ${e.getMessage}")
           Seq((s"${name}_serve", -1.0, -1.0))

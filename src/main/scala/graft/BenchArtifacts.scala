@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Workspace
 
 import graft.ext.{DedupIndex, SimilarityIvfPq, SimilarityPq}
 import graft.sinks.Bucketing
@@ -21,24 +22,19 @@ import graft.sources.Tables
   */
 object BenchArtifacts {
 
-  /** build returns an opaque handle (a temp dir / table tag) the serve
-    * closure consumes; serve must be the PURE query path — no artifact
-    * writes. */
+  /** build returns an opaque handle (a workspace dir / table tag) the
+    * serve closure consumes; serve must be the PURE query path — no
+    * artifact writes. Run a build and its serves in one
+    * [[Workspace.scoped]]. */
   final case class Split(build: (SparkSession, String) => String,
                          serve: (SparkSession, String, String) => DataFrame)
-
-  private def tmp(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix)
-    java.nio.file.Files.walk(d).forEach(p => p.toFile.deleteOnExit())
-    d.toString
-  }
 
   val splits: Map[String, Split] = Map(
     // daily-crawl near-dedup: index the landed (even) half once, serve the
     // fresh (odd) half against it — the per-batch production op
     "q_dedup_incr" -> Split(
       build = (spark, sfDir) => {
-        val dir = tmp("graft_bench_mhidx_")
+        val dir = Workspace.dir("graft_bench_mhidx_")
         DedupIndex.writeIndex(
           Tables.documents(spark, sfDir).filter(col("doc_id") % 2 === 0), dir)
         dir
@@ -50,7 +46,7 @@ object BenchArtifacts {
     // IVF-PQ ANN: land coarse+fine quantizers and codes once, serve top-k
     "q_sim_ivfpq" -> Split(
       build = (spark, sfDir) => {
-        val dir = tmp("graft_bench_ivfpq_")
+        val dir = Workspace.dir("graft_bench_ivfpq_")
         SimilarityIvfPq.writeIndex(Tables.embeddings(spark, sfDir),
           nList = 16, m = 8, ksub = 16, dir)
         dir
@@ -63,7 +59,7 @@ object BenchArtifacts {
     // flat PQ: train + encode + land codes once, serve ADC + exact rerank
     "q_sim_pq" -> Split(
       build = (spark, sfDir) => {
-        val dir = tmp("graft_bench_pq_")
+        val dir = Workspace.dir("graft_bench_pq_")
         val emb = Tables.embeddings(spark, sfDir)
         val cb = SimilarityPq.train(emb, m = 8, ksub = 16, nIters = 2)
         SimilarityPq.writeIndex(SimilarityPq.encode(emb, cb, 8, 16), cb,
@@ -84,7 +80,7 @@ object BenchArtifacts {
       build = (spark, sfDir) => {
         val tag = java.util.UUID.randomUUID().toString
           .replace("-", "").take(12)
-        val dir = tmp("graft_bench_bucket_")
+        val dir = Workspace.dir("graft_bench_bucket_")
         Bucketing.writeBucketed(Tables.lineitem(spark, sfDir)
           .select(col("l_orderkey"), col("l_extendedprice"),
             col("l_quantity")),

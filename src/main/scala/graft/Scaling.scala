@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Workspace
 
 /** Two-point scale-exponent probe (round-15 directive): measures the
   * heaviest queries and the commit-path family at sf0.1 and at a
@@ -23,15 +24,7 @@ object Scaling {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val scaled = args.drop(1).headOption.getOrElse("/tmp/graft_scale_x10")
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Profile.session()
 
     buildBlowup(spark, base, scaled, factor)
     spark.read.parquet(s"$base/region.parquet").count() // session warm-up
@@ -40,13 +33,13 @@ object Scaling {
       "q_triangles", "q_curation_funnel", "q_dedup_cluster",
       "q_ngram_perplexity", "q_sim_ivfpq", "q_dedup_minhash",
       "q_sim_ivf")
-    // SPARK_GRAFT_SCALE_ONLY=q_a,q_b narrows to a subset (re-probing
-    // after a fix without paying the full sweep)
-    val probes = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
+    // SPARK_GRAFT_ONLY=q_a,q_b narrows to a subset (re-probing after a
+    // fix without paying the full sweep), as in Bench
+    val probes = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(all)
     def timeQuery(name: String, dir: String): Double = {
-      def once(): Double = {
+      def once(): Double = Workspace.scoped(spark) {
         val t0 = System.nanoTime()
         SparkEntry.queries(name)(spark, dir)
           .write.format("noop").mode("overwrite").save()
@@ -75,8 +68,7 @@ object Scaling {
     // cdf-slice over appended history, compact the landed files
     def commitFamily(dir: String, tag: String): Seq[(String, Double)] = {
       val ops = graft.sinks.VersionedTable
-      val t = java.nio.file.Files.createTempDirectory(s"scale-$tag")
-        .toString + "/t"
+      val t = Workspace.dir(s"scale-$tag") + "/t"
       val li = spark.read.parquet(s"$dir/lineitem.parquet")
       val t0 = System.nanoTime()
       ops.commit(li, t)
@@ -94,8 +86,8 @@ object Scaling {
       Seq(("append", appendSec), ("cdf_slice", cdfSec),
         ("compact", compactSec))
     }
-    val fam1 = commitFamily(base, "x1").toMap
-    val famN = commitFamily(scaled, "xN").toMap
+    val fam1 = Workspace.scoped(spark)(commitFamily(base, "x1")).toMap
+    val famN = Workspace.scoped(spark)(commitFamily(scaled, "xN")).toMap
 
     val qJson = rows.map { case (q, a, b) =>
       f""""$q":{"x1":$a%.3f,"x$factor":$b%.3f,"ratio":${b / a}%.2f}"""

@@ -1,6 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
 import java.nio.file.{Files, Paths}
+
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import org.apache.spark.sql.graft.Workspace
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -9,20 +14,13 @@ object Verify {
     // optional trailing args: restrict to these query names (builder's fast
     // inner loop; the driver always passes exactly two args → full dump)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Profile.session()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try Workspace.scoped(spark)(fn(spark, sfDir).coalesce(1).write
+        .mode("overwrite").parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
@@ -39,30 +37,18 @@ object Verify {
     SparkEntry.sideInputs
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
-        try fn(spark, sfDir, s"$sideAbs/$name")
+        try Workspace.scoped(spark)(fn(spark, sfDir, s"$sideAbs/$name"))
         catch { case e: Throwable =>
           System.err.println(s"[verify] side-input $name failed: " +
             e.getMessage)
         }
       }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) =>
-        s"${q(k)}: ${q(v.replace("{OUT_DIR}/_side", sideAbs)
-          .replace("{OUT_DIR}", outAbs))}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val sql = SparkEntry.oracleSql.map { case (k, v) =>
+      k -> v.replace("{OUT_DIR}/_side", sideAbs).replace("{OUT_DIR}", outAbs)
+    }
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      JsonMapper.builder().addModule(DefaultScalaModule).build()
+        .writeValueAsString(sql))
     spark.stop()
   }
 }

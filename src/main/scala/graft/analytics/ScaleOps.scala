@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.graft.Workspace
 
 import graft.operators.{BloomJoin, Salting}
 import graft.sources.Tables
@@ -156,16 +157,9 @@ object ScaleOps {
         col("value"))
     // unique dir per invocation: two concurrent suites over the same sfDir
     // must not race on overwrite-while-read of a shared path
-    val tmp = java.nio.file.Files.createTempDirectory("graft_zorder_")
-    val dir = tmp.toString
+    val dir = Workspace.dir("graft_zorder_")
     graft.sinks.Layout.writeZordered(ev, Seq("user_id", "value"), dir,
       numFiles = 8, bitsPerDim = 6)
-    // The returned DataFrame reads lazily from dir, so the copy can't be
-    // deleted here; register every landed file for JVM-exit cleanup so a
-    // resident session's repeated invocations don't grow /tmp forever.
-    // (deleteOnExit runs in reverse registration order: dir first-registered
-    // → deleted last, after its contents.)
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
     spark.read.parquet(dir)
       .filter(col("user_id").between(3, 9) &&
         col("value").between(10.0, 60.0))
@@ -189,7 +183,7 @@ object ScaleOps {
   def qDppScan(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
       .withColumn("day", to_date(col("ts")))
-    val base = java.nio.file.Files.createTempDirectory("graft_dpp_")
+    val base = Workspace.dir("graft_dpp_")
     val factDir = s"$base/fact"
     val dimDir = s"$base/dim"
     ev.write.partitionBy("day").parquet(factDir)
@@ -200,7 +194,6 @@ object ScaleOps {
     ev.select(col("day")).distinct()
       .withColumn("dow", dayofweek(col("day")))
       .write.parquet(dimDir)
-    java.nio.file.Files.walk(base).forEach(p => p.toFile.deleteOnExit())
     dppJoin(spark, factDir, dimDir)
   }
 

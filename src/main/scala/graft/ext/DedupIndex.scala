@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Workspace
 
 import graft.sources.Tables
 
@@ -192,20 +193,15 @@ object DedupIndex {
     val docs = Tables.documents(spark, sfDir)
     val landed = docs.filter(col("doc_id") % 2 === 0)
     val fresh = docs.filter(col("doc_id") % 2 === 1)
-    val dir = java.nio.file.Files.createTempDirectory("graft_mhidx_").toString
+    val dir = Workspace.dir("graft_mhidx_")
     writeIndex(landed, dir)
     val kept = dedupAgainstIndex(fresh, dir, threshold = 0.5)
-    val out = fresh.groupBy(col("source")).agg(count(lit(1)).as("n_new"))
+    fresh.groupBy(col("source")).agg(count(lit(1)).as("n_new"))
       .join(kept.groupBy(col("source")).agg(count(lit(1)).as("n_kept")),
         Seq("source"), "left")
       .select(col("source"), col("n_new"),
         coalesce(col("n_kept"), lit(0L)).as("n_kept"))
       .orderBy(col("source"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count() // materialize before the temp index is eligible for cleanup
-    java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      .forEach(p => p.toFile.deleteOnExit())
-    out
   }
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Workspace
 
 import graft.functions.VectorFunctions.{centroid_topn, dot_product, pq_adc, pq_lut}
 import graft.sources.Tables
@@ -147,10 +148,9 @@ object SimilarityIvfPq {
     * SimilarityIvfPqSpec. */
   def qIvfPq(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivfpq_")
-    writeIndex(emb, nList = 16, m = 8, ksub = 16, tmp.toString)
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
-    serveTopK(emb.filter(col("vec_id") < 10), tmp.toString, emb,
+    val tmp = Workspace.dir("graft_ivfpq_")
+    writeIndex(emb, nList = 16, m = 8, ksub = 16, tmp)
+    serveTopK(emb.filter(col("vec_id") < 10), tmp, emb,
         k = 5, nProbe = 6, rerankK = 20)
       .select(col("query_id"), col("rank"), col("vec_id"),
         round(col("score"), 6).as("score"))

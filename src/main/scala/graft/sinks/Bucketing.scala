@@ -2,6 +2,7 @@ package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Workspace
 
 import graft.analytics.Parity
 import graft.sources.Tables
@@ -30,13 +31,6 @@ object Bucketing {
       .bucketBy(nBuckets, bucketCol).sortBy(bucketCol)
       .mode(SaveMode.Overwrite).saveAsTable(table)
 
-  /** Register cleanup for a landed test/bench copy (the reading plan is
-    * lazy, so the files must outlive this call; a resident session must
-    * still not grow /tmp forever). */
-  private def cleanupOnExit(dir: String): Unit =
-    java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      .forEach(p => p.toFile.deleteOnExit())
-
   // ---- driver query ----
 
   /** q_bucket_join — lands lineitem and orders bucketed by orderkey (8
@@ -49,7 +43,7 @@ object Bucketing {
     * per invocation: concurrent suites must not race on the catalog. */
   def qBucketJoin(spark: SparkSession, sfDir: String): DataFrame = {
     val tag = java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-    val dir = java.nio.file.Files.createTempDirectory("graft_bucket_").toString
+    val dir = Workspace.dir("graft_bucket_")
     val lTbl = s"graft_bkt_lineitem_$tag"
     val oTbl = s"graft_bkt_orders_$tag"
     writeBucketed(Tables.lineitem(spark, sfDir)
@@ -58,7 +52,6 @@ object Bucketing {
     writeBucketed(Tables.orders(spark, sfDir)
       .select(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority")),
       oTbl, s"$dir/orders", "o_orderkey", nBuckets = 8)
-    cleanupOnExit(dir)
     bucketJoinPlan(spark, lTbl, oTbl)
   }
 

@@ -3,6 +3,7 @@ package graft.sinks
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.graft.Workspace
 
 import graft.analytics.Incremental
 import graft.sources.Tables
@@ -249,7 +250,7 @@ object IncrementalView extends IncrementalViewOps(VersionedTable) {
   def qIncrView(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("ts"), col("value"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivm_")
+    val tmp = Workspace.dir("graft_ivm_")
     val src = s"$tmp/src"
     val view = s"$tmp/view"
     VersionedTable.commit(ev.filter(col("event_id") % 2 === 0), src)
@@ -264,7 +265,6 @@ object IncrementalView extends IncrementalViewOps(VersionedTable) {
       Incremental.merge(_, _))
     require(r3.mode == "noop" && r3.viewVersion == r2.viewVersion,
       s"already-current refresh republished: $r3")
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
     Incremental.present(VersionedTable.read(spark, view))
       .orderBy(col("day"), col("event_type"))
   }
@@ -279,7 +279,7 @@ object IncrementalView extends IncrementalViewOps(VersionedTable) {
   def qIncrViewMerge(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("ts"), col("value"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivmk_")
+    val tmp = Workspace.dir("graft_ivmk_")
     val src = s"$tmp/src"
     val view = s"$tmp/view"
     // split at the wall-clock midpoint: the delta is a contiguous TAIL of
@@ -310,7 +310,6 @@ object IncrementalView extends IncrementalViewOps(VersionedTable) {
       "file — the merge was not scoped to touched groups")
     require(refreshKeyed(spark, src, view, "gk", keyedPartials(4),
       keyedMerge).mode == "noop", "already-current keyed refresh reran")
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
     Incremental.present(VersionedTable.read(spark, view))
       .orderBy(col("day"), col("event_type"))
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.analytics.Parity
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Workspace
 
 /** The lake's oracle-checked queries (`q_time_travel`, `q_compact`, …): each
   * drives one protocol feature end to end on the default
@@ -23,11 +24,9 @@ object LakeQueries {
   def qTimeTravel(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("value"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_versioned_")
-    val dir = tmp.toString
+    val dir = Workspace.dir("graft_versioned_")
     val v1 = commit(ev.filter(col("event_id") % 2 === 0), dir)
     val v2 = commit(ev.filter(col("event_id") % 2 === 1), dir)
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
     val a = read(spark, dir, Some(v1))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_v1"),
@@ -49,8 +48,7 @@ object LakeQueries {
   def qCompact(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("value"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_compact_")
-    val dir = tmp.toString
+    val dir = Workspace.dir("graft_compact_")
     (0 until 3).foreach { b =>
       commitOnce(ev.filter(col("event_id") % 3 === b), dir, s"q_compact:$b")
     }
@@ -59,7 +57,6 @@ object LakeQueries {
     require(v == before + 1, s"compact did not publish: $v vs $before")
     require(read(spark, dir, Some(before)).count() ==
       read(spark, dir, Some(v)).count(), "pre-compact version torn")
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
     read(spark, dir, Some(v))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -79,8 +76,7 @@ object LakeQueries {
   def qSortOrder(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("value"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sortord_")
-    val dir = tmp.toString
+    val dir = Workspace.dir("graft_sortord_")
     (0 until 4).foreach { b =>
       commitOnce(ev.filter(col("event_id") % 4 === b), dir,
         s"q_sort_order:$b")
@@ -99,7 +95,6 @@ object LakeQueries {
     require(nPost >= 2 && pruned.nonEmpty && pruned.size < nPost,
       s"declared sort order must make the band probe skip files: " +
         s"${pruned.size} of $nPost admitted")
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
     prunedRead(spark, dir, "value", 10.0, 20.0)
       .filter(col("value").between(10.0, 20.0))
       .groupBy(col("event_type"))
@@ -121,8 +116,7 @@ object LakeQueries {
   def qDeleteVector(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("value"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_delvec_")
-    val dir = tmp.toString
+    val dir = Workspace.dir("graft_delvec_")
     commit(ev.filter(col("event_id") % 2 === 0), dir)
     val v2 = commit(ev.filter(col("event_id") % 2 === 1), dir)
     val v3 = deleteWhere(spark, dir, col("event_id") % 7 === 3)
@@ -132,7 +126,6 @@ object LakeQueries {
     // time travel across deletes: the pre-delete snapshot still has it all
     require(read(spark, dir, Some(v2)).count() == ev.count(),
       "pre-delete snapshot torn by delete commits")
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
     read(spark, dir, Some(v4))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -154,8 +147,7 @@ object LakeQueries {
   def qEqDelete(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("value"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_eqdel_")
-    val dir = tmp.toString
+    val dir = Workspace.dir("graft_eqdel_")
     commit(ev.filter(col("event_id") % 2 === 0), dir)
     commit(ev.filter(col("event_id") % 2 === 1), dir)
     val dataDirsBefore = backend.list(s"$dir/data").size
@@ -176,7 +168,6 @@ object LakeQueries {
     require(read(spark, dir, Some(vDel))
       .filter(col("event_id") % 9 === 0).count() == 0,
       "pinned post-delete snapshot still shows deleted keys")
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
     read(spark, dir, Some(vC))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -196,8 +187,7 @@ object LakeQueries {
   def qMergeLake(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("value"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_merge_")
-    val dir = tmp.toString
+    val dir = Workspace.dir("graft_merge_")
     commitClustered(ev, dir, zCols = Seq("event_id"),
       statCols = Seq("event_id"), numFiles = 8)
     val updates = ev.filter(col("event_id") % 10 === 0)
@@ -205,7 +195,6 @@ object LakeQueries {
     val inserts = ev.filter(col("event_id") % 10 === 1)
       .withColumn("event_id", col("event_id") + 10000000L)
     merge(spark, dir, updates.unionByName(inserts), "event_id")
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
     read(spark, dir)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -224,12 +213,10 @@ object LakeQueries {
   def qPointLookup(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("value"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bloom_")
-    val dir = tmp.toString
+    val dir = Workspace.dir("graft_bloom_")
     val v = commit(ev.repartition(8, col("event_id")), dir)
     writeStats(spark, dir, v, Seq("event_id"))
     writeBlooms(spark, dir, v, Seq("event_id"))
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
     val targets: Seq[Any] = Seq(123L, 456L, 789L)
     val kept = prunedFilesEq(spark, dir, v, "event_id", targets)
     require(kept.size < 8,
@@ -254,8 +241,7 @@ object LakeQueries {
   def qCdcMerge(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("value"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cdcmerge_")
-    val dir = tmp.toString
+    val dir = Workspace.dir("graft_cdcmerge_")
     commitClustered(ev, dir, zCols = Seq("event_id"),
       statCols = Seq("event_id"), numFiles = 8)
     val changes = ev.filter(col("event_id") % 10 === 5)
@@ -271,7 +257,6 @@ object LakeQueries {
     val v2 = mergeChanges(spark, dir, changes, "event_id",
       txnId = Some("cdc:0"))
     require(v1 == v2, s"replayed txn re-published: $v1 vs $v2")
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
     read(spark, dir)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -290,8 +275,7 @@ object LakeQueries {
   def qConstraintGate(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("value"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ck_")
-    val dir = tmp.toString
+    val dir = Workspace.dir("graft_ck_")
     commit(ev.filter(col("value") <= 100.0), dir)
     addConstraint(spark, dir, "value_cap", "value <= 100.0")
     val rejected =
@@ -302,7 +286,6 @@ object LakeQueries {
     require(versions(dir).size == 1, "a rejected commit published a version")
     require(vacuumOrphans(dir, graceMs = 0L) == 1,
       "rejected batch did not become vacuum debris")
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
     read(spark, dir)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -332,7 +315,7 @@ object LakeQueries {
         o.select((col("o_orderkey") + lit(100000000L)).as("o_orderkey"),
             col("o_orderstatus"), col("o_totalprice"))
           .filter(col("o_orderkey") % 11 === 0))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cdf_")
+    val tmp = Workspace.dir("graft_cdf_")
     val dir = s"$tmp/t"
     commit(o, dir)
     commit(v2, dir, append = false) // logical overwrite: non-append lineage
@@ -380,7 +363,6 @@ object LakeQueries {
       require(snapSig(live) == snapSig(v2),
         "replica after feed apply diverged from the target snapshot")
     } finally feed.unpersist()
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
     feed.groupBy(col("op"))
       .agg(count(lit(1)).as("n"),
         round(Parity.decSum2(col("o_totalprice")), 2).as("sum_price"))
@@ -399,8 +381,7 @@ object LakeQueries {
   def qBranchFf(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("value"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_branch_")
-    val dir = tmp.toString
+    val dir = Workspace.dir("graft_branch_")
     commit(ev.filter(col("event_id") % 2 === 0), dir)
     val bd = createBranch(dir, "audit")
     commit(ev.filter(col("event_id") % 2 === 1), bd)
@@ -413,7 +394,6 @@ object LakeQueries {
     require(backend.list(s"$dir/data").size == dataDirs,
       "fast-forward copied data into the parent; it must be manifest-only")
     retireBranch(dir, "audit")
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
     read(spark, dir)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -433,7 +413,7 @@ object LakeQueries {
   def qWapPromote(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("value"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_wap_")
+    val tmp = Workspace.dir("graft_wap_")
     val staging = s"$tmp/staging"
     val prod = s"$tmp/prod"
     commit(ev, staging)
@@ -442,7 +422,6 @@ object LakeQueries {
     retire(staging)
     require(backend.list(s"$prod/data").isEmpty,
       "promotion copied data files; it must be manifest-only")
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
     read(spark, prod)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -463,7 +442,7 @@ object LakeQueries {
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_hpart_")
+    val tmp = Workspace.dir("graft_hpart_")
     val days = s"$tmp/days"; val buckets = s"$tmp/buckets"
     declarePartitioning(days, Seq("days(ts)"), numFiles = 8)
     commit(ev.filter(col("event_id") % 2 === 0), days)
@@ -492,7 +471,6 @@ object LakeQueries {
       .filter(col("user_id") === 42L).count()
     require(prunedB == exactB,
       s"bucket-pruned read returned $prunedB rows, full scan $exactB")
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
     prunedRead(spark, days, "ts", lo, hi)
       .filter(col("ts") >= lit(lo) && col("ts") < lit(hi))
       .groupBy(col("event_type"))

@@ -3,6 +3,7 @@ package graft.sinks
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.graft.Workspace
 
 import graft.analytics.Parity
 import graft.sources.Tables
@@ -46,8 +47,7 @@ object SchemaEvolution {
     * rule inlined, so a hash match pins the whole land→evolve→read path. */
   def qSchemaEvolution(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_evolve_")
-    val dir = tmp.toString
+    val dir = Workspace.dir("graft_evolve_")
     // v1 vintage: the original schema
     ev.filter(col("event_id") % 2 === 0)
       .select(col("event_id"), col("event_type"), col("value"))
@@ -57,7 +57,6 @@ object SchemaEvolution {
       .select(col("event_id"), col("event_type"), col("value"),
         length(col("props")).as("props_len"))
       .write.mode("append").parquet(dir)
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
     val unioned = discoverSchema(spark, dir)
     evolvedRead(spark, dir, unioned)
       .groupBy(col("event_type"))

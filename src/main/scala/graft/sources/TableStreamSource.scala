@@ -8,7 +8,7 @@ import org.apache.spark.sql.sources.{DataSourceRegister, StreamSinkProvider, Str
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
 
-import org.apache.spark.sql.graft.StreamingDf
+import org.apache.spark.sql.graft.{StreamingDf, Workspace}
 
 import graft.sinks.VersionedTable
 
@@ -856,7 +856,7 @@ object TableStream {
   def qTableStream(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("value"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_tstream_")
+    val tmp = Workspace.dir("graft_tstream_")
     val src = s"$tmp/src"
     val dst = s"$tmp/dst"
     VersionedTable.commit(ev.filter(col("event_id") % 2 === 0), src)
@@ -882,7 +882,6 @@ object TableStream {
     // destination's row count — same divergence pin, no re-scan job
     require(landedRows.get() == ev.count(),
       "destination row count diverged from the source table")
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
     VersionedTable.read(spark, dst)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -901,7 +900,7 @@ object TableStream {
   def qBranchRead(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("value"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bread_")
+    val tmp = Workspace.dir("graft_bread_")
     val parent = s"$tmp/t"
     val dst = s"$tmp/dst"
     val evens = ev.filter(col("event_id") % 2 === 0)
@@ -933,7 +932,6 @@ object TableStream {
     require(VersionedTable.read(spark, parent).count() == evens.count(),
       "branch data leaked into the parent lineage")
     VersionedTable.deleteWhere(spark, bd, col("value") > 450.0)
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
     VersionedTable.readBranch(spark, parent, "audit")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -954,7 +952,7 @@ object TableStream {
   def qCdfStream(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("value"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cdf_")
+    val tmp = Workspace.dir("graft_cdf_")
     val src = s"$tmp/src"
     val dst = s"$tmp/dst"
     VersionedTable.commit(ev.filter(col("event_id") % 2 === 0), src)
@@ -982,7 +980,6 @@ object TableStream {
     require(batches.get() == 3,
       s"capped CDF drain ran ${batches.get()} non-empty batches, " +
         "expected 3 (one per version transition)")
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
     VersionedTable.read(spark, dst)
       .groupBy(col("op"), col("event_type"))
       .agg(count(lit(1)).as("n"),

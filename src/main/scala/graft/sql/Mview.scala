@@ -12,6 +12,7 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
+import org.apache.spark.sql.graft.Workspace
 
 import graft.sinks.{IncrementalView, VersionedTable, ViewRefresh}
 
@@ -272,8 +273,7 @@ object Mview {
       .select(org.apache.spark.sql.functions.col("event_id"),
         org.apache.spark.sql.functions.col("event_type"),
         org.apache.spark.sql.functions.col("value"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sqlmv_")
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
+    val tmp = Workspace.dir("graft_sqlmv_")
     val src = s"$tmp/src"
     val view = s"$tmp/view"
     val even = org.apache.spark.sql.functions.col("event_id") % 2 === 0
@@ -312,8 +312,7 @@ object Mview {
         org.apache.spark.sql.functions.col("event_type"),
         org.apache.spark.sql.functions.col("ts"),
         org.apache.spark.sql.functions.col("value"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sqlmvr_")
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
+    val tmp = Workspace.dir("graft_sqlmvr_")
     val src = s"$tmp/src"
     val view = s"$tmp/view"
     VersionedTable.commit(ev, src)

@@ -3,6 +3,7 @@ package graft.sql
 import org.apache.spark.sql.{DataFrame, DataFrame => SqlDataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Workspace
 
 import graft.analytics.Parity
 import graft.sinks.{LakeQueries, VersionedTable}
@@ -21,14 +22,9 @@ object SqlQueries {
 
   private def register(spark: SparkSession): Unit =
     spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
-  private def eventsTmp(spark: SparkSession, sfDir: String,
-                        prefix: String): (DataFrame, String) = {
-    val ev = Tables.events(spark, sfDir)
+  private def events(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("value"))
-    val tmp = java.nio.file.Files.createTempDirectory(prefix)
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
-    (ev, tmp.toString)
-  }
 
   /** q_sql_time_travel — the q_time_travel protocol driven entirely from
     * SQL: `VERSION AS OF` reads the pinned v1 manifest, the bare
@@ -38,7 +34,8 @@ object SqlQueries {
     * serves identical snapshots. */
   def qSqlTimeTravel(spark: SparkSession, sfDir: String): DataFrame = {
     register(spark)
-    val (ev, dir) = eventsTmp(spark, sfDir, "graft_sqltt_")
+    val ev = events(spark, sfDir)
+    val dir = Workspace.dir("graft_sqltt_")
     val v1 = VersionedTable.commit(ev.filter(col("event_id") % 2 === 0), dir)
     VersionedTable.commit(ev.filter(col("event_id") % 2 === 1), dir)
     val head = spark.sql(s"SELECT * FROM graft.`$dir`")
@@ -66,7 +63,8 @@ object SqlQueries {
     * version row pinned in-query. */
   def qSqlMerge(spark: SparkSession, sfDir: String): DataFrame = {
     register(spark)
-    val (ev, dir) = eventsTmp(spark, sfDir, "graft_sqlmerge_")
+    val ev = events(spark, sfDir)
+    val dir = Workspace.dir("graft_sqlmerge_")
     VersionedTable.commitClustered(ev, dir, zCols = Seq("event_id"),
       statCols = Seq("event_id"), numFiles = 8)
     val updates = ev.filter(col("event_id") % 10 === 0)
@@ -92,7 +90,8 @@ object SqlQueries {
     * SQL: hash-matched against a WHERE NOT oracle. */
   def qSqlDelete(spark: SparkSession, sfDir: String): DataFrame = {
     register(spark)
-    val (ev, dir) = eventsTmp(spark, sfDir, "graft_sqldel_")
+    val ev = events(spark, sfDir)
+    val dir = Workspace.dir("graft_sqldel_")
     VersionedTable.commit(ev, dir)
     spark.sql(s"CALL graft.delete_where('$dir', 'value > 90.0')")
     val refused = scala.util.Try(
@@ -121,8 +120,7 @@ object SqlQueries {
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sqlddl_")
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
+    val tmp = Workspace.dir("graft_sqlddl_")
     val dir = s"$tmp/t"
     spark.sql(s"CREATE TABLE graft.`$dir` (event_id BIGINT, " +
       "ts TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE) " +
@@ -163,8 +161,7 @@ object SqlQueries {
     register(spark)
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("value"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sqlalter_")
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
+    val tmp = Workspace.dir("graft_sqlalter_")
     val dir = s"$tmp/t"
     spark.sql(s"CREATE TABLE graft.`$dir` " +
       "(event_id BIGINT, event_type STRING, value DOUBLE)")
@@ -205,7 +202,8 @@ object SqlQueries {
     * pinned along the way. */
   def qSqlBranch(spark: SparkSession, sfDir: String): DataFrame = {
     register(spark)
-    val (ev, dir) = eventsTmp(spark, sfDir, "graft_sqlbranch_")
+    val ev = events(spark, sfDir)
+    val dir = Workspace.dir("graft_sqlbranch_")
     val even = ev.filter(col("event_id") % 2 === 0)
     VersionedTable.commit(even, dir)
     val res = spark.sql(s"CALL graft.create_branch('$dir', 'audit', 'head')")
@@ -250,7 +248,8 @@ object SqlQueries {
     * the head hash-matches an oracle that recomputes the assignment. */
   def qSqlUpdate(spark: SparkSession, sfDir: String): DataFrame = {
     register(spark)
-    val (ev, dir) = eventsTmp(spark, sfDir, "graft_sqlupd_")
+    val ev = events(spark, sfDir)
+    val dir = Workspace.dir("graft_sqlupd_")
     VersionedTable.commit(ev, dir)
     spark.sql(s"UPDATE graft.`$dir` SET value = value + 1000.0 " +
       "WHERE event_id % 10 = 0")
@@ -277,8 +276,7 @@ object SqlQueries {
     register(spark)
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("value"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sqlrename_")
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
+    val tmp = Workspace.dir("graft_sqlrename_")
     val dir = s"$tmp/t"
     spark.sql(s"CREATE TABLE graft.`$dir` " +
       "(eid INT, event_type STRING, value DOUBLE)")
@@ -330,8 +328,7 @@ object SqlQueries {
     register(spark)
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("value"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sqlnested_")
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
+    val tmp = Workspace.dir("graft_sqlnested_")
     val dir = s"$tmp/t"
     spark.sql(s"CREATE TABLE graft.`$dir` " +
       "(event_id BIGINT, main STRUCT<temp: DOUBLE, kind: STRING>)")
@@ -400,8 +397,7 @@ object SqlQueries {
     register(spark)
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("value"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sqlelem_")
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
+    val tmp = Workspace.dir("graft_sqlelem_")
     val dir = s"$tmp/t"
     spark.sql(s"CREATE TABLE graft.`$dir` " +
       "(event_id BIGINT, weather ARRAY<STRUCT<cond: STRING, n: INT>>)")
@@ -462,8 +458,7 @@ object SqlQueries {
     register(spark)
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("value"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sqldefault_")
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
+    val tmp = Workspace.dir("graft_sqldefault_")
     val dir = s"$tmp/t"
     spark.sql(s"CREATE TABLE graft.`$dir` " +
       "(event_id BIGINT, event_type STRING, value DOUBLE)")
@@ -519,8 +514,7 @@ object SqlQueries {
     register(spark)
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("value"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sqlndef_")
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
+    val tmp = Workspace.dir("graft_sqlndef_")
     val dir = s"$tmp/t"
     spark.sql(s"CREATE TABLE graft.`$dir` " +
       "(event_id BIGINT, main STRUCT<kind: STRING, reading: DOUBLE>)")
@@ -580,8 +574,7 @@ object SqlQueries {
     register(spark)
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("value"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sqlcstr_")
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
+    val tmp = Workspace.dir("graft_sqlcstr_")
     val dir = s"$tmp/t"
     spark.sql(s"CREATE TABLE graft.`$dir` " +
       "(event_id BIGINT, event_type STRING, value DOUBLE)")
@@ -630,7 +623,8 @@ object SqlQueries {
     * tables. */
   def qSqlMergeFull(spark: SparkSession, sfDir: String): DataFrame = {
     register(spark)
-    val (ev, dir) = eventsTmp(spark, sfDir, "graft_sqlmf_")
+    val ev = events(spark, sfDir)
+    val dir = Workspace.dir("graft_sqlmf_")
     VersionedTable.commitClustered(ev, dir, zCols = Seq("event_id"),
       statCols = Seq("event_id"), numFiles = 8)
     val matchedSide = ev.filter(col("event_id") % 7 === 0)
@@ -654,12 +648,6 @@ object SqlQueries {
       .orderBy(col("event_type"))
   }
 
-  private def extTmp(prefix: String): String = {
-    val tmp = java.nio.file.Files.createTempDirectory(prefix)
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
-    s"$tmp/out"
-  }
-
   /** q_sql_dedup — the ext/ dedup surface driven from SQL: `CALL
     * graft.dedup_ngram` lands the full Jaccard pair table through the
     * lake protocol, the catalog reads it back, and the top-20 selection
@@ -670,7 +658,7 @@ object SqlQueries {
     register(spark)
     val docs = Tables.documents(spark, sfDir)
     docs.createOrReplaceTempView("q_sql_dedup_docs")
-    val out = extTmp("graft_sqldedup_")
+    val out = Workspace.dir("graft_sqldedup_") + "/out"
     spark.sql(
       s"CALL graft.dedup_ngram('q_sql_dedup_docs', '$out', '3', '0')")
     val landed = spark.sql(s"SELECT * FROM graft.`$out`")
@@ -708,7 +696,7 @@ object SqlQueries {
     emb.filter(col("vec_id") < 10)
       .createOrReplaceTempView("q_sql_topk_queries")
     emb.createOrReplaceTempView("q_sql_topk_corpus")
-    val out = extTmp("graft_sqltopk_")
+    val out = Workspace.dir("graft_sqltopk_") + "/out"
     spark.sql("CALL graft.topk_similar('q_sql_topk_queries', " +
       s"'q_sql_topk_corpus', '$out', '5')")
     spark.sql(s"SELECT * FROM graft.`$out`")
@@ -727,7 +715,7 @@ object SqlQueries {
       .createOrReplaceTempView("q_sql_curate_docs")
     all.filter(col("doc_id") < 2)
       .createOrReplaceTempView("q_sql_curate_eval")
-    val out = extTmp("graft_sqlcurate_")
+    val out = Workspace.dir("graft_sqlcurate_") + "/out"
     spark.sql("CALL graft.curate('q_sql_curate_docs', " +
       s"'q_sql_curate_eval', '$out', '0.5', '0')")
     spark.sql(s"SELECT * FROM graft.`$out`")
@@ -747,7 +735,8 @@ object SqlQueries {
     * 100 TB this is one sidecar read versus a full-table pass. */
   def qSqlFastAgg(spark: SparkSession, sfDir: String): DataFrame = {
     register(spark)
-    val (ev, dir) = eventsTmp(spark, sfDir, "graft_sqlfastagg_")
+    val ev = events(spark, sfDir)
+    val dir = Workspace.dir("graft_sqlfastagg_")
     val v = VersionedTable.commit(ev, dir)
     VersionedTable.writeStats(spark, dir, v,
       Seq("event_id", "event_type", "value"))
@@ -771,7 +760,8 @@ object SqlQueries {
     * is the entire fact-dim join discipline. */
   def qSqlDpp(spark: SparkSession, sfDir: String): DataFrame = {
     register(spark)
-    val (ev, dir) = eventsTmp(spark, sfDir, "graft_sqldpp_")
+    val ev = events(spark, sfDir)
+    val dir = Workspace.dir("graft_sqldpp_")
     VersionedTable.declarePartitioning(dir, Seq("bucket(8,event_type)"),
       numFiles = 8)
     VersionedTable.commit(ev, dir)
@@ -782,8 +772,7 @@ object SqlQueries {
     val b = ev.agg(min(col("event_type")), max(col("event_type")))
       .collect()(0)
     val (mn, mx) = (b.getString(0), b.getString(1))
-    val dimTmp = java.nio.file.Files.createTempDirectory("graft_sqldpp_dim_")
-    java.nio.file.Files.walk(dimTmp).forEach(p => p.toFile.deleteOnExit())
+    val dimTmp = Workspace.dir("graft_sqldpp_dim_")
     ev.select(col("event_type")).distinct()
       .withColumn("keep",
         (col("event_type") === mn || col("event_type") === mx).cast("int"))
@@ -829,10 +818,9 @@ object SqlQueries {
     * cannot rescue. */
   def qSqlSpj(spark: SparkSession, sfDir: String): DataFrame = {
     register(spark)
-    val (ev, dirA) = eventsTmp(spark, sfDir, "graft_sqlspj_a_")
-    val tmpB = java.nio.file.Files.createTempDirectory("graft_sqlspj_b_")
-    java.nio.file.Files.walk(tmpB).forEach(p => p.toFile.deleteOnExit())
-    val dirB = tmpB.toString
+    val ev = events(spark, sfDir)
+    val dirA = Workspace.dir("graft_sqlspj_a_")
+    val dirB = Workspace.dir("graft_sqlspj_b_")
     VersionedTable.declarePartitioning(dirA, Seq("bucket(16,event_id)"))
     VersionedTable.declarePartitioning(dirB, Seq("bucket(16,event_id)"))
     VersionedTable.commit(ev, dirA)
@@ -881,15 +869,16 @@ object SqlQueries {
     * downstream incremental consumer. */
   def qSqlChanges(spark: SparkSession, sfDir: String): DataFrame = {
     register(spark)
-    val (ev, dir) = eventsTmp(spark, sfDir, "graft_sqlchg_")
+    val ev = events(spark, sfDir)
+    val dir = Workspace.dir("graft_sqlchg_")
     VersionedTable.commit(ev.filter(col("event_id") % 3 === 0), dir)
     VersionedTable.commit(ev.filter(col("event_id") % 3 === 1), dir)
     VersionedTable.commit(ev.filter(col("event_id") % 3 === 2), dir)
     require(spark.sql(s"SELECT * FROM graft.`$dir#changes=2..2`")
       .count() == 0, "an empty changes range must serve zero rows")
-    val (ev2, dir2) = eventsTmp(spark, sfDir, "graft_sqlchg2_")
-    VersionedTable.commit(ev2.filter(col("event_id") % 100 === 0), dir2)
-    VersionedTable.commit(ev2.filter(col("event_id") % 100 === 1), dir2,
+    val dir2 = Workspace.dir("graft_sqlchg2_")
+    VersionedTable.commit(ev.filter(col("event_id") % 100 === 0), dir2)
+    VersionedTable.commit(ev.filter(col("event_id") % 100 === 1), dir2,
       append = false) // overwrite: non-append lineage
     val refused = scala.util.Try(
       spark.sql(s"SELECT * FROM graft.`$dir2#changes=1..2`").collect())
@@ -921,8 +910,7 @@ object SqlQueries {
         o.select((col("o_orderkey") + lit(100000000L)).as("o_orderkey"),
             col("o_orderstatus"), col("o_totalprice"))
           .filter(col("o_orderkey") % 11 === 0))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sqlcdf_")
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
+    val tmp = Workspace.dir("graft_sqlcdf_")
     val dir = s"$tmp/t"
     val out = s"$tmp/feed"
     VersionedTable.commit(o, dir)
@@ -950,11 +938,10 @@ object SqlQueries {
   def qSqlCatalog(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("value"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sqlwh_")
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
+    val tmp = Workspace.dir("graft_sqlwh_")
     val cat = s"gwh${java.util.UUID.randomUUID().toString.take(8)}"
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", tmp.toString)
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", tmp)
     spark.sql(s"CREATE NAMESPACE $cat.corp")
     ev.createOrReplaceTempView("q_sql_cat_src")
     spark.sql(s"CREATE TABLE $cat.corp.by_type AS " +
@@ -988,8 +975,7 @@ object SqlQueries {
     register(spark)
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("value"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sqlrtas_")
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
+    val tmp = Workspace.dir("graft_sqlrtas_")
     val dir = s"$tmp/t"
     ev.createOrReplaceTempView("q_sql_rtas_src")
     spark.sql(s"CREATE TABLE graft.`$dir` AS " +
@@ -1023,8 +1009,7 @@ object SqlQueries {
     register(spark)
     val o = Tables.orders(spark, sfDir)
       .select(col("o_orderkey"), col("o_totalprice"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sqllim_")
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
+    val tmp = Workspace.dir("graft_sqllim_")
     val dir = s"$tmp/t"
     (0 until 4).foreach(i => VersionedTable.commit(
       o.filter(col("o_orderkey") % 4 === i).coalesce(1), dir))
@@ -1056,8 +1041,7 @@ object SqlQueries {
     val o = Tables.orders(spark, sfDir)
       .select(col("o_orderkey"), col("o_totalprice"))
     val hi = o.agg(max("o_orderkey")).head().getLong(0)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sqltopn_")
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
+    val tmp = Workspace.dir("graft_sqltopn_")
     val dir = s"$tmp/t"
     // four disjoint key-range landings (what time-ordered ingest
     // produces naturally for a timestamp column)
@@ -1091,8 +1075,7 @@ object SqlQueries {
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"),
         nullif(col("event_type"), lit("click")).as("maybe"), col("value"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sqlcst_")
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
+    val tmp = Workspace.dir("graft_sqlcst_")
     val dir = s"$tmp/t"
     VersionedTable.commit(ev.filter(col("event_id") % 2 === 0), dir)
     VersionedTable.commit(ev.filter(col("event_id") % 2 === 1), dir)
@@ -1156,8 +1139,7 @@ object SqlQueries {
     register(spark)
     val o = Tables.orders(spark, sfDir)
       .select(col("o_orderkey"), col("o_totalprice"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sqlgrp_")
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
+    val tmp = Workspace.dir("graft_sqlgrp_")
     val det = s"$tmp/detail"
     val sm = s"$tmp/stats"
     val g = s"$tmp/grp"
@@ -1211,7 +1193,8 @@ object SqlQueries {
     * other 10^5 files' worth of history. */
   def qSqlCompactWhere(spark: SparkSession, sfDir: String): DataFrame = {
     register(spark)
-    val (ev, dir) = eventsTmp(spark, sfDir, "graft_sqlcw_")
+    val ev = events(spark, sfDir)
+    val dir = Workspace.dir("graft_sqlcw_")
     val hi = ev.agg(max("event_id")).head().getLong(0)
     val cut = hi / 3 + 1
     (0 until 3).foreach(i => VersionedTable.commit(
@@ -1255,7 +1238,8 @@ object SqlQueries {
     * stays for global re-layout. */
   def qSqlZorderWhere(spark: SparkSession, sfDir: String): DataFrame = {
     register(spark)
-    val (ev, dir) = eventsTmp(spark, sfDir, "graft_sqlzw_")
+    val ev = events(spark, sfDir)
+    val dir = Workspace.dir("graft_sqlzw_")
     val hi = ev.agg(max("event_id")).head().getLong(0)
     val cut = hi / 3 + 1
     (0 until 3).foreach(i => VersionedTable.commit(
@@ -1316,8 +1300,7 @@ object SqlQueries {
       .agg(org.apache.spark.sql.functions.min(col("event_id"))
         .as("signup_event_id"))
       .createOrReplaceTempView("q_sql_asof_signups")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sqlasof_")
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
+    val tmp = Workspace.dir("graft_sqlasof_")
     val dir = s"$tmp/t"
     spark.sql(s"CALL graft.asof_join('q_sql_asof_purchases', " +
       "'q_sql_asof_signups', 'user_id', 'ts', 's_user_id', 's_ts', " +
@@ -1395,8 +1378,7 @@ object SqlQueries {
     register(spark)
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("value"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sqlcdf_")
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
+    val tmp = Workspace.dir("graft_sqlcdf_")
     val src = s"$tmp/t"
     VersionedTable.commit(ev.filter(col("event_id") % 2 === 0), src)
     VersionedTable.commit(ev.filter(col("event_id") % 2 === 1), src)
@@ -1437,8 +1419,7 @@ object SqlQueries {
     register(spark)
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sqlnstats_")
-    java.nio.file.Files.walk(tmp).forEach(p => p.toFile.deleteOnExit())
+    val tmp = Workspace.dir("graft_sqlnstats_")
     val dir = s"$tmp/t"
     spark.sql(s"CREATE TABLE graft.`$dir` (event_id BIGINT, " +
       "main STRUCT<temp: DOUBLE, kind: STRING>)")

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.Workspace
 
 /** The whole driver query surface, executed once per test JVM. Each entry
   * holds a query's executed (AQE-final) plan text and its collected row
@@ -8,6 +9,7 @@ import org.apache.spark.sql.SparkSession
   * map instead of running the surface again. Under adaptive execution the
   * final plan only exists after the query runs, and its text prints the
   * Final and the Initial plan, so a plan property checked here covers both.
+  * Each query runs in its own [[Workspace.scoped]], as in Bench and Verify.
   */
 object QuerySurface {
 
@@ -19,9 +21,11 @@ object QuerySurface {
     synchronized {
       if (executed == null)
         executed = SparkEntry.queries.map { case (name, fn) =>
-          val df = fn(spark, sf)
-          val rows = df.collect().length.toLong
-          name -> Executed(df.queryExecution.executedPlan.toString, rows)
+          name -> Workspace.scoped(spark) {
+            val df = fn(spark, sf)
+            val rows = df.collect().length.toLong
+            Executed(df.queryExecution.executedPlan.toString, rows)
+          }
         }
       executed
     }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.Workspace
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session per suite (spark guide: one lazy SparkSession per suite). */
@@ -11,12 +12,11 @@ trait SparkSpec extends AnyFunSuite {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-wh").toString)
+    .config("spark.sql.warehouse.dir", Workspace.dir("graft-wh"))
     .getOrCreate()
 
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  /** A fresh directory, deleted at JVM exit. */
+  def tmpDir(prefix: String): String = Workspace.dir(prefix)
 
   val sf = "/root/testdata/sf0.001"
 }

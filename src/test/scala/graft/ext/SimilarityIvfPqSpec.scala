@@ -9,11 +9,6 @@ class SimilarityIvfPqSpec extends SparkSpec {
 
   private lazy val emb = Tables.embeddings(spark, sf)
 
-  private def rmrf(dir: String): Unit =
-    java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      .sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => p.toFile.delete())
-
   test("the landed artifact has the three-part layout, codes carry no vectors") {
     val dir = tmpDir("graft_ivfpq_art_")
     SimilarityIvfPq.writeIndex(emb, nList = 8, m = 8, ksub = 16, dir)
@@ -23,7 +18,6 @@ class SimilarityIvfPqSpec extends SparkSpec {
       lists.schema.toString)
     assert(lists.count() == emb.count())
     assert(spark.read.parquet(s"$dir/codebook").count() == 8 * 16)
-    rmrf(dir)
   }
 
   test("serving probes prune the list scan to nProbe directories") {
@@ -34,7 +28,6 @@ class SimilarityIvfPqSpec extends SparkSpec {
     // one query probing 2 of 8 lists: every ADC candidate must come from
     // those lists, so the result exists and is bounded by the probed share
     assert(served.count() == 3)
-    rmrf(dir)
   }
 
   test("recall@5 against exact brute force, with residual-PQ + rerank") {
@@ -52,7 +45,6 @@ class SimilarityIvfPqSpec extends SparkSpec {
     // structure) — 0.4 pins "far better than the 8/16-probe random
     // baseline" without overfitting the seed
     assert(hit / total >= 0.4, s"recall@5 = ${hit / total} ($hit/$total)")
-    rmrf(dir)
   }
 
   test("q_sim_ivfpq returns k rows per query in rank order") {

@@ -11,11 +11,6 @@ class SimilarityPqSpec extends SparkSpec {
   private lazy val emb = Tables.embeddings(spark, sf)
   private lazy val cb = SimilarityPq.train(emb, m, ksub, nIters = 2)
 
-  private def rmrf(dir: String): Unit =
-    java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      .sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => p.toFile.delete())
-
   test("training is a pure function of the data — partition order does " +
       "not leak (the property the side-input oracle replay stands on)") {
     // Lloyd means are double sums; without the 2^-10 snap, a different
@@ -88,7 +83,7 @@ class SimilarityPqSpec extends SparkSpec {
   }
 
   test("landed index round-trips: serve from artifact == serve in memory") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq_").toString
+    val dir = tmpDir("graft_pq_")
     val coded = SimilarityPq.encode(emb, cb, m, ksub)
     SimilarityPq.writeIndex(coded, cb, m, ksub, dir)
     val (codedL, cbL, (mL, ksubL)) = SimilarityPq.loadIndex(spark, dir)
@@ -100,16 +95,14 @@ class SimilarityPqSpec extends SparkSpec {
     val mem = SimilarityPq.adcTopK(queries, coded, cb, m, ksub, k = 5)
       .select(col("query_id"), col("vec_id"), col("score"))
     assert(served.except(mem).isEmpty && mem.except(served).isEmpty)
-    rmrf(dir)
   }
 
   test("the landed code table carries no embeddings (the 32x artifact)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq2_").toString
+    val dir = tmpDir("graft_pq2_")
     SimilarityPq.writeIndex(SimilarityPq.encode(emb, cb, m, ksub), cb, m,
       ksub, dir)
     val schema = spark.read.parquet(s"$dir/codes").schema
     assert(schema.fieldNames.toSet == Set("vec_id", "codes"), schema.toString)
-    rmrf(dir)
   }
 
   test("q_sim_pq returns k rows per query in rank order") {

@@ -1,45 +1,20 @@
 package graft.operators
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Profile, SparkSpec}
 import graft.analytics.ScaleOps
 import graft.sources.Tables
 
 class BloomJoinSpec extends SparkSpec {
   import spark.implicits._
 
-  /** `counter` after `body` runs with `l` registered — listener delivery is
-    * async, so settle until the counter stops moving. */
-  private def settled(counter: AtomicLong, l: SparkListener)(body: => Unit): Long = {
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      var prev = -1L; var cur = counter.get()
-      while (cur != prev) { Thread.sleep(30); prev = cur; cur = counter.get() }
-    } finally spark.sparkContext.removeSparkListener(l)
-    counter.get()
-  }
+  private def shuffleBytesOf(body: => Unit): Long =
+    Profile.recording(spark)(body)._2.shuffleWriteBytes
 
-  private def shuffleBytesOf(body: => Unit): Long = {
-    val bytes = new AtomicLong(0L)
-    settled(bytes, new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null)
-          bytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })(body)
-  }
-
-  private def jobsOf(body: => Unit): Long = {
-    val jobs = new AtomicLong(0L)
-    settled(jobs, new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    })(body)
-  }
+  private def jobsOf(body: => Unit): Long =
+    Profile.recording(spark)(body)._2.jobs.size.toLong
 
   test("bloomJoin result is identical to the plain join (superset contract)") {
     val urgent = Tables.orders(spark, sf)

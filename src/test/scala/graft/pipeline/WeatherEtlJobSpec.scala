@@ -1,15 +1,11 @@
 package graft.pipeline
 
-import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue,
-  CountDownLatch, TimeUnit}
+import java.util.concurrent.ConcurrentHashMap
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.util.LongAccumulator
 
-import graft.SparkSpec
+import graft.{Profile, SparkSpec}
 import graft.core.WeatherFixtures
 import graft.sources.RestWeatherSource
 
@@ -82,14 +78,16 @@ class WeatherEtlJobSpec extends SparkSpec {
 
   test("load failure fails fast by default (an engine must not drop data silently)") {
     // tablePath is an existing plain FILE -> the parquet append cannot succeed
-    val f = java.nio.file.Files.createTempFile("etl-notadir", ".bin")
+    val f = java.nio.file.Files.createFile(
+      java.nio.file.Paths.get(tmpDir("etl-notadir"), "t.bin"))
     intercept[Exception] {
       WeatherEtlJob.run(spark, cfg, f.toString, FakeFetcher)
     }
   }
 
   test("failFastLoad=false mirrors the reference's swallow-and-log load edge (weather_etl.py:190–191)") {
-    val f = java.nio.file.Files.createTempFile("etl-notadir2", ".bin")
+    val f = java.nio.file.Files.createFile(
+      java.nio.file.Paths.get(tmpDir("etl-notadir2"), "t.bin"))
     val r = WeatherEtlJob.run(spark, cfg, f.toString, FakeFetcher,
       failFastLoad = false)
     assert(r.fetched == 1 && r.appended == 0)
@@ -138,31 +136,9 @@ class WeatherEtlJobSpec extends SparkSpec {
 
   private def docs(d: Seq[String]) = d.toDF("value")
 
-  /** Result-stage names of the jobs `body` runs, in job order. A marker
-    * job after `body` closes the window: listener events arrive in order,
-    * so once the marker's start is seen every earlier start has been too. */
-  private def jobNames(body: => Unit): Seq[String] = {
-    val marker = "weather-etl-spec-marker"
-    val names = new ConcurrentLinkedQueue[String]()
-    val closed = new CountDownLatch(1)
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(p =>
-              p.getProperty("spark.job.description") == marker))
-          closed.countDown()
-        else names.add(e.stageInfos.maxBy(_.stageId).name)
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(l)
-    try {
-      body
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setJobDescription(null)
-      assert(closed.await(60, TimeUnit.SECONDS), "marker job never seen")
-    } finally sc.removeSparkListener(l)
-    names.asScala.toSeq
-  }
+  /** Result-stage names of the jobs `body` runs, in job order. */
+  private def jobNames(body: => Unit): Seq[String] =
+    Profile.recording(spark)(body)._2.jobs.map(_.name)
 
   test("a landing onto an existing table fetches each listed city once") {
     val path = tmpDir("once")

@@ -1,57 +1,13 @@
 package graft.sinks
 
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Profile, SparkSpec}
+import graft.Profile.Job
 import graft.sql.GraftCatalog
 
 object LakeJobCountSpec {
-  /** One started job: its short call site (`collect at …`) and the
-    * outermost Spark method on the caller's stack. */
-  final case class Job(name: String, entry: String) {
-    /** A schema inference: the job was started by a reader resolving its
-      * schema (`DataFrameReader.parquet` without a schema, or a file
-      * table's `schema`), not by an action or a write. */
-    def infers: Boolean =
-      entry.contains("DataFrameReader") || entry.contains("FileTable")
-  }
-
-  /** The jobs `body` runs, in start order. A marker job after `body`
-    * closes the window: listener events arrive in order, so once the
-    * marker's start is seen every earlier start has been too. */
-  def jobsOf(spark: SparkSession)(body: => Unit): Seq[Job] = {
-    val marker = "lake-job-count-marker"
-    val jobs = new ConcurrentLinkedQueue[Job]()
-    val closed = new CountDownLatch(1)
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(p =>
-              p.getProperty("spark.job.description") == marker))
-          closed.countDown()
-        else {
-          val last = e.stageInfos.maxBy(_.stageId)
-          jobs.add(Job(last.name, last.details.linesIterator.nextOption()
-            .getOrElse("")))
-        }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(l)
-    try {
-      body
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setJobDescription(null)
-      assert(closed.await(60, TimeUnit.SECONDS), "marker job never seen")
-    } finally sc.removeSparkListener(l)
-    jobs.asScala.toSeq
-  }
-
   /** A [[TableIO]] decorator that counts calls by method name. */
   final class CountingTableIO(inner: TableIO) extends TableIO {
     private val n = scala.collection.mutable.Map.empty[String, Long]
@@ -82,7 +38,7 @@ object LakeJobCountSpec {
   * samples a footer to learn the table's schema (a one-task Spark job per
   * inference), and the per-operation job counts stay pinned. */
 class LakeJobCountSpec extends SparkSpec {
-  import LakeJobCountSpec.{CountingTableIO, Job}
+  import LakeJobCountSpec.CountingTableIO
 
   /** What one lake op did: its Spark jobs and its `TableIO` calls by
     * method. */
@@ -91,7 +47,13 @@ class LakeJobCountSpec extends SparkSpec {
   private val vt = VersionedTable
 
   private def jobsOf(body: => Unit): Seq[Job] =
-    LakeJobCountSpec.jobsOf(spark)(body)
+    Profile.recording(spark)(body)._2.jobs
+
+  /** A schema inference: the job was started by a reader resolving its
+    * schema (`DataFrameReader.parquet` without a schema, or a file table's
+    * `schema`), not by an action or a write. */
+  private def infers(j: Job): Boolean =
+    j.entry.contains("DataFrameReader") || j.entry.contains("FileTable")
 
   private def rows(lo: Long, n: Long,
       session: SparkSession = spark): DataFrame =
@@ -163,7 +125,7 @@ class LakeJobCountSpec extends SparkSpec {
   test("one lake round runs no schema-inference job") {
     val ops = round(_ => ()).map { case (op, o) => op -> o.jobs }.toMap
     ops.foreach { case (op, js) =>
-      assert(!js.exists(_.infers), s"$op: ${describe(js)}")
+      assert(!js.exists(infers), s"$op: ${describe(js)}")
     }
     assert(ops("append").size == 1, describe(ops("append")))
     assert(ops("merge").size <= 11, describe(ops("merge")))
@@ -201,17 +163,17 @@ class LakeJobCountSpec extends SparkSpec {
       assert(vt.readChanges(spark, dir, from, from + 1).count() == 100)
     }
     val pinned = changes()
-    assert(!pinned.exists(_.infers), describe(pinned))
+    assert(!pinned.exists(infers), describe(pinned))
     SchemaHeaderSpec.strip(dir)
     val stripped = changes()
-    assert(stripped.exists(_.infers), describe(stripped))
+    assert(stripped.exists(infers), describe(stripped))
   }
 
   test("a table written without headers still infers, op by op") {
     // the fallback path, and proof the detector above sees inference jobs
     val ops = round(SchemaHeaderSpec.strip).map { case (op, o) =>
       op -> o.jobs }.toMap
-    val inferring = ops.map { case (op, js) => op -> js.count(_.infers) }
+    val inferring = ops.map { case (op, js) => op -> js.count(infers) }
     assert(inferring("append") == 0, describe(ops("append")))
     Seq("merge", "scan", "lookup", "delete").foreach { op =>
       assert(inferring(op) > 0, s"$op: ${describe(ops(op))}")

@@ -2,7 +2,7 @@ package graft.sinks
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Profile, SparkSpec}
 
 /** Copy-on-write MERGE on the versioned table. The property under test
   * throughout: the rewrite set is exactly the files that CONTAIN a matched
@@ -100,15 +100,15 @@ class MergeSpec extends SparkSpec {
       .select(col("id"), (col("id") * 100).as("payload"))
       .unionByName(spark.range(9000, 9010)
         .select(col("id"), (col("id") * 2).as("payload")))
-    val viaMerge = LakeJobCountSpec.jobsOf(spark) {
-      ops.merge(spark, a, ups, "id"); ()
+    val (_, viaMerge) = Profile.recording(spark) {
+      ops.merge(spark, a, ups, "id")
     }
-    val viaChanges = LakeJobCountSpec.jobsOf(spark) {
-      ops.mergeChanges(spark, b, ups.withColumn("op", lit("u")), "id"); ()
+    val (_, viaChanges) = Profile.recording(spark) {
+      ops.mergeChanges(spark, b, ups.withColumn("op", lit("u")), "id")
     }
-    assert(viaMerge.size <= viaChanges.size,
-      s"merge ${viaMerge.map(_.name)} vs mergeChanges " +
-        s"${viaChanges.map(_.name)}")
+    assert(viaMerge.jobs.size <= viaChanges.jobs.size,
+      s"merge ${viaMerge.jobs.map(_.name)} vs mergeChanges " +
+        s"${viaChanges.jobs.map(_.name)}")
     val got = ops.read(spark, a)
     assert(got.count() == 4010 && got.exceptAll(ops.read(spark, b)).isEmpty)
   }
