@@ -30,7 +30,8 @@ object Profile {
   /** One Spark job: its wall (start to end event; NaN if its end was not
     * seen), call site (job description or short call site), the name of
     * its result stage (`collect at …`) and that stage's entry frame, the
-    * outermost Spark method on the caller's stack. */
+    * outermost Spark method on the caller's stack. A job with no stages
+    * has an empty name and entry. */
   final case class Job(id: Int, seconds: Double, site: String, name: String,
                        entry: String)
 
@@ -85,10 +86,12 @@ object Profile {
       val desc = prop(Description)
       if (desc.contains(marker)) { open = false; closed.countDown() }
       else {
-        val last = e.stageInfos.maxBy(_.stageId)
-        val site = desc.orElse(prop("callSite.short")).getOrElse(last.name)
-        jobs(e.jobId) = (e.time, Job(e.jobId, Double.NaN, site, last.name,
-          last.details.linesIterator.nextOption().getOrElse("")))
+        // a job with no stages (an empty RDD's action) has no result stage
+        val last = e.stageInfos.maxByOption(_.stageId)
+        val name = last.fold("")(_.name)
+        val site = desc.orElse(prop("callSite.short")).getOrElse(name)
+        jobs(e.jobId) = (e.time, Job(e.jobId, Double.NaN, site, name,
+          last.flatMap(_.details.linesIterator.nextOption()).getOrElse("")))
         e.stageInfos.sortBy(_.stageId).foreach(s => stages.getOrElseUpdate(
           s.stageId, Stage(s.stageId, s.name, Vector.empty, 0L, 0L, 0L)))
       }

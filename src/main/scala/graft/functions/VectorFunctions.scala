@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.graft.{CentroidArgmax, CentroidTopN, CosineSimilarity, DotProduct, GraftExpressions, HyperplaneBuckets, InterleaveBits, NfcNormalize, PqAdc, PqEncode, PqLut, RankBucket, RollingHash, SimHash64}
 
 /** Public facade over the native Catalyst kernels in
@@ -95,7 +95,4 @@ object VectorFunctions {
     GraftExpressions.column(PqAdc(
       GraftExpressions.expression(codes), GraftExpressions.expression(lut),
       ksub))
-
-  /** Register cosine_sim / dot_product / rolling_hash for SQL use. */
-  def register(spark: SparkSession): Unit = GraftExpressions.register(spark)
 }

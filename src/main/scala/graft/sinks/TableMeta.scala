@@ -6,7 +6,15 @@ import org.apache.spark.sql.functions._
 /** Table-level declarations of [[VersionedTableOps]]: hidden partitioning,
   * durable table properties and the auto-compact/analyze/expire/refresh
   * triggers they drive, the declared-schema chain and retired-column
-  * ledger, and commit-time CHECK constraints. */
+  * ledger, and commit-time CHECK constraints.
+  *
+  * Each metadata store has one on-disk format with one reader and one
+  * writer: properties and the declared schema are OCC chains of
+  * exclusively-created entries (`manifests/props/p<n>`,
+  * `manifests/schema/d<n>`), and the auto-ANALYZE counter and the
+  * retired-column ledger are append-only ledgers of one file per entry
+  * (`manifests/analyzecount.d/`, `manifests/retired.d/`). A table with
+  * no entry in a store has no value there. */
 private[sinks] trait TableMeta { self: VersionedTableOps =>
 
   // ---- hidden partitioning (declared transforms, see Partitioning.scala) --
@@ -47,38 +55,28 @@ private[sinks] trait TableMeta { self: VersionedTableOps =>
 
   // ---- table properties (an OCC chain next to the manifests) ----
 
-  /** Legacy single-file store — read-through fallback only; every write
-    * goes to the chain, which shadows this file forever after. */
-  private def propertiesPath(dir: String) = s"${manifestDir(dir)}/properties"
   private def propsChainDir(dir: String) = s"${manifestDir(dir)}/props"
 
   private def parseProps(lines: Seq[String]): Map[String, String] =
-    // `#`-prefixed lines are headers (the legacy store's stamp pad),
-    // not properties — same convention as manifest metadata lines
-    lines.filterNot(_.startsWith("#")).filter(_.contains('=')).map { l =>
+    lines.filter(_.contains('=')).map { l =>
       val i = l.indexOf('=')
       l.substring(0, i) -> l.substring(i + 1)
     }.toMap
 
-  /** (chain head index, current map); head 0 = no chain yet, the map is
-    * the legacy file's (or empty). */
-  private def propsState(dir: String): (Int, Map[String, String]) =
-    chainHead(propsChainDir(dir), "p") match {
-      case (n, Some(lines)) => (n, parseProps(lines))
-      case (_, None) =>
-        val p = propertiesPath(dir)
-        (0, if (!io.exists(p)) Map.empty else parseProps(io.readLines(p)))
-    }
+  /** (chain head index, current map); head 0 = no chain yet, no
+    * properties. */
+  private def propsState(dir: String): (Int, Map[String, String]) = {
+    val (n, lines) = chainHead(propsChainDir(dir), "p")
+    (n, lines.fold(Map.empty[String, String])(parseProps))
+  }
 
   /** OCC read-modify-write over the chain: claim index head+1 with
     * createExclusive; the LOSER re-reads and re-applies — a single-key
     * update commutes with any concurrent one, so auto-retry is the
     * right policy (unlike the schema CAS, where a lost ALTER must
     * refuse: its change set was computed against a schema that no
-    * longer exists). The legacy store's plain rewrite was the same
-    * lost-update hole as everywhere else: two concurrent SET
-    * TBLPROPERTIES and the loser's key silently vanished. `f` returning
-    * None means no-op (no chain entry lands at all). */
+    * longer exists), and two concurrent SET TBLPROPERTIES both land.
+    * `f` returning None means no-op (no chain entry lands at all). */
   private def propsOcc(dir: String)(
       f: Map[String, String] => Option[Map[String, String]]): Unit = {
     var done = false
@@ -135,33 +133,30 @@ private[sinks] trait TableMeta { self: VersionedTableOps =>
   def removeTableProperty(dir: String, key: String): Unit =
     propsOcc(dir)(m => if (!m.contains(key)) None else Some(m - key))
 
-  /** Memo for [[tableProperties]], keyed by the properties file's
-    * (mtime, size) — the cboFold pattern (see `cboFoldCache`), and for
-    * the same reason: `tableProperties` runs at PLAN time (the mview
+  /** Memo for [[tableProperties]], keyed by the chain dir and stamped
+    * with its head index — the cboFold pattern (see `cboFoldCache`), and
+    * for the same reason: `tableProperties` runs at PLAN time (the mview
     * rewrite rule consults `mview.attached` per Aggregate-over-scan per
     * fixed-point iteration; sort-order and maintenance knobs read it
     * too), and behind an object-store TableIO an uncached read is a GET
-    * per plan. A hit costs two stats (mtime + size) instead; in-process
+    * per plan. A hit costs one `list` instead. The head index is monotone
+    * by construction, so a foreign writer can never revisit a stamp and
+    * cross-process writers are covered by the stamp alone; in-process
     * writers additionally invalidate eagerly (see
-    * [[setTableProperty]]/[[removeTableProperty]]), so a same-stamp
-    * rewrite inside the filesystem's mtime resolution cannot serve
-    * stale. Cross-process writers are covered by the stamp alone.
-    * LRU-capped like the fold cache; correctness never rides on a hit.
-    * `propsReads` counts actual line-reads (cache misses) — the
-    * optimizer-IO canary's probe. */
+    * [[setTableProperty]]/[[removeTableProperty]]). LRU-capped like the
+    * fold cache; correctness never rides on a hit. `propsReads` counts
+    * actual line-reads (cache misses) — the optimizer-IO canary's
+    * probe. */
   private val propsCache =
-    new java.util.LinkedHashMap[String, ((Long, Long), Map[String, String])](
+    new java.util.LinkedHashMap[String, (Int, Map[String, String])](
       64, 0.75f, /* accessOrder = */ true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[String,
-            ((Long, Long), Map[String, String])]): Boolean = size > 512
+          e: java.util.Map.Entry[String, (Int, Map[String, String])])
+          : Boolean = size > 512
     }
   private[graft] val propsReads = new java.util.concurrent.atomic.AtomicLong
   private[graft] def invalidateProperties(dir: String): Unit =
-    propsCache.synchronized {
-      propsCache.remove(propertiesPath(dir))
-      propsCache.remove(propsChainDir(dir))
-    }
+    propsCache.synchronized(propsCache.remove(propsChainDir(dir)))
 
   /** Flush every path-keyed memo — required when the BACKEND behind
     * `io` changes ([[VersionedTable.setBackend]]): a path string means
@@ -175,43 +170,20 @@ private[sinks] trait TableMeta { self: VersionedTableOps =>
   }
 
   def tableProperties(dir: String): Map[String, String] = {
-    // chain store: the memo stamps on the HEAD INDEX, monotone by
-    // construction — a foreign writer can never revisit a stamp, which
-    // is the structural guarantee the legacy single-file store needed
-    // the strictly-growing size pad for. A hit costs one `list`; a miss
-    // adds one `readLines` of the head entry (retry via chainHead when
-    // a prune wins the race for a just-listed head).
+    // a hit costs one `list`; a miss adds one `readLines` of the head
+    // entry (retry via chainHead when a prune wins the race for a
+    // just-listed head)
     val cd = propsChainDir(dir)
     val ns = io.list(cd).filter(_.startsWith("p"))
       .flatMap(n => scala.util.Try(n.drop(1).toInt).toOption)
-    if (ns.isEmpty) {
-      // legacy single-file fallback: (mtime, size) stamp, pad-protected
-      val p = propertiesPath(dir)
-      if (!io.exists(p)) return Map.empty
-      val stamp = (io.mtime(p), io.size(p))
-      val hit = propsCache.synchronized {
-        Option(propsCache.get(p)).filter(_._1 == stamp).map(_._2)
-      }
-      return hit.getOrElse {
-        propsReads.incrementAndGet()
-        val m = parseProps(io.readLines(p))
-        // a concurrent rewrite between the stat and the read stores
-        // fresh content under the stale stamp; the next call's stamp
-        // mismatch self-heals with one extra read
-        propsCache.synchronized { propsCache.put(p, (stamp, m)) }
-        m
-      }
-    }
-    val stamp = (ns.max.toLong, -1L)
+    if (ns.isEmpty) return Map.empty
+    val stamp = ns.max
     val hit = propsCache.synchronized {
       Option(propsCache.get(cd)).filter(_._1 == stamp).map(_._2)
     }
     hit.getOrElse {
       propsReads.incrementAndGet()
-      val m = chainHead(cd, "p") match {
-        case (_, Some(lines)) => parseProps(lines)
-        case _ => Map.empty[String, String]
-      }
+      val m = propsState(dir)._2
       propsCache.synchronized { propsCache.put(cd, (stamp, m)) }
       m
     }
@@ -348,31 +320,22 @@ private[sinks] trait TableMeta { self: VersionedTableOps =>
     }
   }
 
-  /** Legacy single-file counter (pre-delta-ledger); still folded into
-    * the sum so an in-flight table upgrades seamlessly, reset by the
-    * first crossing after the upgrade. */
-  private def analyzeCountPath(dir: String) =
-    s"${manifestDir(dir)}/analyzecount"
-
   private def analyzeDeltaDir(dir: String) =
     s"${manifestDir(dir)}/analyzecount.d"
 
   /** Rows landed since the last auto-ANALYZE, summed from the delta
-    * ledger (plus the legacy counter file, if one predates it) — the
-    * spec seam for the loss-free accumulation contract. A delta a racer
-    * consumed between our list and read counts as 0 here: the racer
-    * summed it, crossed, and paid the ANALYZE on its side. */
-  private[sinks] def analyzePendingRows(dir: String): Long = {
-    val legacy =
-      if (!io.exists(analyzeCountPath(dir))) 0L
-      else io.readLines(analyzeCountPath(dir)).headOption
-        .flatMap(_.toLongOption).getOrElse(0L)
-    val dd = analyzeDeltaDir(dir)
-    legacy + io.list(dd).map { n =>
+    * ledger — the spec seam for the loss-free accumulation contract. */
+  private[sinks] def analyzePendingRows(dir: String): Long =
+    sumDeltas(analyzeDeltaDir(dir), io.list(analyzeDeltaDir(dir)))
+
+  /** Sum of the named delta entries under `dd`. A delta a racer consumed
+    * between our list and read counts as 0: the racer summed it,
+    * crossed, and paid the ANALYZE on its side. */
+  private def sumDeltas(dd: String, names: Seq[String]): Long =
+    names.map { n =>
       scala.util.Try(io.readLines(s"$dd/$n").headOption
         .flatMap(_.toLongOption).getOrElse(0L)).getOrElse(0L)
     }.sum
-  }
 
   /** Landing-cadence auto-ANALYZE (the `stats.auto.rows` table
     * property) — the CBO-stats twin of [[maybeAutoCompact]], completing
@@ -410,17 +373,9 @@ private[sinks] trait TableMeta { self: VersionedTableOps =>
           io.createExclusive(s"$dd/${java.util.UUID.randomUUID}",
             Seq(rowsLanded.toString))
         val names = io.list(dd)
-        val legacy =
-          if (!io.exists(analyzeCountPath(dir))) 0L
-          else io.readLines(analyzeCountPath(dir)).headOption
-            .flatMap(_.toLongOption).getOrElse(0L)
-        val acc = legacy + names.map { n =>
-          scala.util.Try(io.readLines(s"$dd/$n").headOption
-            .flatMap(_.toLongOption).getOrElse(0L)).getOrElse(0L)
-        }.sum
+        val acc = sumDeltas(dd, names)
         if (acc >= t) {
           names.foreach(n => io.delete(s"$dd/$n"))
-          io.delete(analyzeCountPath(dir))
           try {
             val head = versions(dir).last
             val cols = props.get("stats.auto.cols").toSeq
@@ -539,11 +494,9 @@ private[sinks] trait TableMeta { self: VersionedTableOps =>
     * first-wins RACE, not a silent overwrite: ALTER rides
     * [[casDeclareSchema]], which refuses when it lost — a plain
     * `writeLines` here was the catalog's last check-then-act door (two
-    * concurrent ALTERs: the loser's change silently vanished). Legacy
-    * single-file `schema.json` tables read through the fallback; their
-    * first chain write shadows the old file. Superseded chain entries
-    * are best-effort pruned behind a tail deep enough that no
-    * concurrent reader's just-listed head can vanish before its read. */
+    * concurrent ALTERs: the loser's change silently vanished). Superseded
+    * chain entries are best-effort pruned behind a tail deep enough that
+    * no concurrent reader's just-listed head can vanish before its read. */
   private def schemaChainDir(dir: String) = s"${manifestDir(dir)}/schema"
 
   /** Head of a monotone exclusive-create chain: (max index, its lines),
@@ -581,14 +534,10 @@ private[sinks] trait TableMeta { self: VersionedTableOps =>
       .filter(_ <= upto - 8)
       .foreach(k => scala.util.Try(io.delete(s"$chainDir/$pfx$k")))
 
-  private def chainState(dir: String): (Int, Option[String]) =
-    chainHead(schemaChainDir(dir), "d") match {
-      case (n, Some(lines)) => (n, lines.headOption)
-      case (_, None) =>
-        val legacy = s"${manifestDir(dir)}/schema.json"
-        (0,
-          if (!io.exists(legacy)) None else io.readLines(legacy).headOption)
-    }
+  private def chainState(dir: String): (Int, Option[String]) = {
+    val (n, lines) = chainHead(schemaChainDir(dir), "d")
+    (n, lines.flatMap(_.headOption))
+  }
 
   /** Unconditional (re)declaration — CREATE/REPLACE, branch fork copy,
     * promote pinning, abort-restore: callers whose intent is "this IS
@@ -630,30 +579,19 @@ private[sinks] trait TableMeta { self: VersionedTableOps =>
     * dropped column's stale values), and ids are never recycled.
     * Storage is APPEND-ONLY (one exclusively-created file per entry
     * under `retired.d/`) because the ledger's semantics are a SET UNION:
-    * the old single-file read-modify-write silently dropped an entry
-    * when two DROPs raced — and a lost retirement is the dangerous
+    * a read-modify-write of one file would silently drop an entry when
+    * two DROPs raced — and a lost retirement is the dangerous
     * direction (a later ADD could reuse the physical name and serve the
-    * dropped column's stale bytes). Legacy single-file ledgers read
-    * through the fallback union. */
-  private def retiredPath(dir: String) = s"${manifestDir(dir)}/retired"
+    * dropped column's stale bytes). */
   private def retiredDir(dir: String) = s"${manifestDir(dir)}/retired.d"
 
-  def retiredColumns(dir: String): Seq[(Long, String)] = {
-    val p = retiredPath(dir)
-    val legacy =
-      if (!io.exists(p)) Seq.empty
-      else io.readLines(p).filter(_.nonEmpty).map { l =>
-        val Array(id, phys) = l.split('\t')
-        (id.toLong, phys)
-      }
-    val entries = io.list(retiredDir(dir)).flatMap { n =>
+  def retiredColumns(dir: String): Seq[(Long, String)] =
+    io.list(retiredDir(dir)).flatMap { n =>
       io.readLines(s"${retiredDir(dir)}/$n").filter(_.nonEmpty).map { l =>
         val Array(id, phys) = l.split('\t')
         (id.toLong, phys)
       }
-    }
-    (legacy ++ entries).distinct.sortBy(_._1)
-  }
+    }.distinct.sortBy(_._1)
 
   def retireColumn(dir: String, id: Long, physical: String): Unit = {
     io.mkdirs(retiredDir(dir))

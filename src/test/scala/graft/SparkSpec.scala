@@ -12,11 +12,17 @@ trait SparkSpec extends AnyFunSuite {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir", Workspace.dir("graft-wh"))
+    .config("spark.sql.warehouse.dir", SparkSpec.warehouse)
     .getOrCreate()
 
   /** A fresh directory, deleted at JVM exit. */
   def tmpDir(prefix: String): String = Workspace.dir(prefix)
 
   val sf = "/root/testdata/sf0.001"
+}
+
+object SparkSpec {
+  /** The warehouse dir of the JVM's one session: suites share the session
+    * `getOrCreate` made first, so one dir serves them all. */
+  lazy val warehouse: String = Workspace.dir("graft-wh")
 }

@@ -144,13 +144,13 @@ class LakeJobCountSpec extends SparkSpec {
       .map { case (op, o) => op -> o.io }.toMap
     val pinned = Map(
       "append" -> Map("createExclusive" -> 1L, "writeLines" -> 3L,
-        "readLines" -> 3L, "mkdirs" -> 3L, "exists" -> 11L, "list" -> 10L),
+        "readLines" -> 3L, "mkdirs" -> 3L, "exists" -> 4L, "list" -> 10L),
       "merge" -> Map("createExclusive" -> 1L, "writeLines" -> 7L,
-        "readLines" -> 9L, "mkdirs" -> 7L, "exists" -> 8L, "list" -> 8L),
-      "scan" -> Map("readLines" -> 2L, "exists" -> 2L, "list" -> 6L),
-      "lookup" -> Map("readLines" -> 2L, "exists" -> 2L, "list" -> 2L),
+        "readLines" -> 9L, "mkdirs" -> 7L, "exists" -> 5L, "list" -> 8L),
+      "scan" -> Map("readLines" -> 2L, "list" -> 6L),
+      "lookup" -> Map("readLines" -> 2L, "exists" -> 1L, "list" -> 2L),
       "delete" -> Map("createExclusive" -> 1L, "writeLines" -> 1L,
-        "readLines" -> 7L, "mkdirs" -> 1L, "exists" -> 10L, "list" -> 14L))
+        "readLines" -> 7L, "mkdirs" -> 1L, "exists" -> 3L, "list" -> 14L))
     assert(io == pinned, "TableIO calls by op and method")
   }
 

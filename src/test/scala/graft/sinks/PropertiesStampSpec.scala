@@ -3,17 +3,16 @@ package graft.sinks
 import graft.SparkSpec
 
 /** The properties store is an OCC CHAIN of exclusively-created files
-  * (`props/p1, p2, …`): every write claims the next index, the memo
-  * stamps on the head index — monotone by construction, so no stamp
-  * can EVER recur across the store's history (the structural guarantee
-  * the legacy single-file store needed a strictly-growing size pad
-  * for), and two concurrent writers get a decidable createExclusive
-  * race instead of a silent lost update (the legacy rewrite dropped
-  * the loser's key — the same check-then-act hole the schedule fuzzer
-  * found in commitOnce and the DDL race probe found in ALTER). These
-  * probes pin the chain's invariants on the same adversarial sequences
-  * the r15 advice named against the old store, plus the race the old
-  * store could not survive. */
+  * (`props/p1, p2, …`), the table's only properties store: every write
+  * claims the next index, and the memo stamps on the head index —
+  * monotone by construction, so no stamp can EVER recur across the
+  * store's history, even when a rewrite revisits an earlier body inside
+  * one mtime granule. Two concurrent writers get a decidable
+  * createExclusive race instead of a silent lost update (a plain rewrite
+  * of one file drops the loser's key — the same check-then-act hole the
+  * schedule fuzzer found in commitOnce and the DDL race probe found in
+  * ALTER). These probes pin the chain's invariants on value-revisiting
+  * write sequences, a foreign reader's memo, and racing writers. */
 class PropertiesStampSpec extends SparkSpec {
   import spark.implicits._
 
@@ -73,23 +72,6 @@ class PropertiesStampSpec extends SparkSpec {
     // fresh stamp even inside one mtime granule
     assert(foreign.tableProperties(dir) == Map("k" -> "zzzz"),
       "the foreign reader served a stale memoized properties map")
-  }
-
-  test("a legacy single-file store reads through and is shadowed by " +
-      "the first chain write") {
-    val dir = tmpDir("props-legacy") + "/t"
-    TableIO.local.mkdirs(s"$dir/manifests")
-    TableIO.local.writeLines(s"$dir/manifests/properties",
-      Seq("#pad.header", "old=1", "keep=x"))
-    assert(ops.tableProperties(dir) == Map("old" -> "1", "keep" -> "x"))
-    ops.setTableProperty(dir, "new", "2")
-    assert(ops.tableProperties(dir) ==
-      Map("old" -> "1", "keep" -> "x", "new" -> "2"))
-    ops.removeTableProperty(dir, "old")
-    assert(ops.tableProperties(dir) == Map("keep" -> "x", "new" -> "2"))
-    // the legacy file is untouched (shadowed, never rewritten)
-    assert(TableIO.local.readLines(s"$dir/manifests/properties")
-      .contains("old=1"))
   }
 
   test("racing single-key writes all survive — the lost-update hole " +

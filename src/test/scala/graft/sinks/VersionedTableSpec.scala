@@ -39,10 +39,8 @@ abstract class VersionedTableBehavior extends SparkSpec {
     val reads = new java.util.concurrent.atomic.AtomicLong
     val counting = new ForwardingTableIO(backend) {
       override def readLines(path: String): Seq[String] = {
-        // chain entries and the legacy file both count: the guarantee
-        // is "no per-plan GET", whatever the store's layout
-        if (path.endsWith("/properties") ||
-            path.matches(".*/manifests/props/p\\d+"))
+        // the guarantee is "no per-plan GET" of a chain entry
+        if (path.matches(".*/manifests/props/p\\d+"))
           reads.incrementAndGet()
         super.readLines(path)
       }
@@ -70,7 +68,7 @@ abstract class VersionedTableBehavior extends SparkSpec {
     o.removeTableProperty(dir, "a")
     assert(o.tableProperties(dir) == Map("b" -> "2"))
     // a FOREIGN writer (another ops over the same backend — a different
-    // process in production) is caught by the (mtime, size) stamp alone
+    // process in production) is caught by the head-index stamp alone
     new VersionedTableOps(counting).setTableProperty(dir, "c", "3")
     assert(o.tableProperties(dir) == Map("b" -> "2", "c" -> "3"),
       "stamp mismatch must refresh a foreign write")
@@ -94,7 +92,7 @@ abstract class VersionedTableBehavior extends SparkSpec {
       "an equal-content-length rewrite must still advance the chain")
     assert(o.tableProperties(dir) == Map("a" -> "2"),
       "a same-size foreign rewrite must not serve the stale memo")
-    // legacy pad headers never leak into the parsed map
+    // no `#` header line leaks into the parsed map
     assert(!o.tableProperties(dir).keySet.exists(_.startsWith("#")))
   }
 

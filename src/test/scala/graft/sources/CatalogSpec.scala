@@ -1,11 +1,30 @@
 package graft.sources
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.GraftExpressions
+
 import graft.SparkSpec
 
+object CatalogSpec {
+  /** Register every test table as a temp view and the native functions, so
+    * ad-hoc SQL such as `SELECT cosine_sim(...) FROM embeddings` runs. */
+  def registerAll(spark: SparkSession, sfDir: String): Unit = {
+    Tables.names.foreach { t =>
+      // events goes through its ns-timestamp normalizing loader, not a raw
+      // parquet read (which Spark 4 rejects for TIMESTAMP(NANOS))
+      val df = if (t == "events") Tables.events(spark, sfDir)
+               else Tables.load(spark, sfDir, t)
+      df.createOrReplaceTempView(t)
+    }
+    GraftExpressions.register(spark)
+  }
+}
+
 class CatalogSpec extends SparkSpec {
+  import CatalogSpec.registerAll
 
   test("ad-hoc SQL over registered tables + native functions") {
-    Catalog.registerAll(spark, sf)
+    registerAll(spark, sf)
     val row = spark.sql(
       """SELECT COUNT(*) AS n,
         |  ROUND(AVG(cosine_sim(embedding, embedding)), 4) AS self_cos,
@@ -22,7 +41,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("text + layout kernels from SQL: nfc_normalize, interleave_bits") {
-    Catalog.registerAll(spark, sf)
+    registerAll(spark, sf)
     val r = spark.sql(
       """SELECT nfc_normalize('Café') AS norm,
         |  interleave_bits(array(3, 5), 3) AS z

@@ -10,10 +10,11 @@ import graft.SparkSpec
   * analysis into the same reference-object kernels the Scala path plans,
   * so plans stay O(1) in model size and SQL results agree bit-for-bit. */
 class SqlKernelsSpec extends SparkSpec {
+  import CatalogSpec.registerAll
   import spark.implicits._
 
   test("hyperplane_buckets from SQL matches the Scala seeded path") {
-    Catalog.registerAll(spark, sf)
+    registerAll(spark, sf)
     // same (nTables, bits, dim, seed) → identical bucket ids
     val sqlBuckets = spark.sql(
       """SELECT vec_id, hyperplane_buckets(embedding, 4, 8, 64, 42) AS b
@@ -30,7 +31,7 @@ class SqlKernelsSpec extends SparkSpec {
   }
 
   test("centroid_argmax / centroid_topn read the trained view by name") {
-    Catalog.registerAll(spark, sf)
+    registerAll(spark, sf)
     // two axis-aligned centroids in 4-d: argmax is the larger coordinate
     Seq((0, Seq(1f, 0f, 0f, 0f)), (1, Seq(0f, 1f, 0f, 0f)))
       .toDF("centroid_id", "centroid").createOrReplaceTempView("cents")
@@ -53,7 +54,7 @@ class SqlKernelsSpec extends SparkSpec {
   }
 
   test("rank_bucket takes a literal boundary array; per-row refuses") {
-    Catalog.registerAll(spark, sf)
+    registerAll(spark, sf)
     val r = spark.sql(
       """SELECT rank_bucket(CAST(0.05 AS DOUBLE), array(0.1, 0.5, 0.9)) AS lo,
         |  rank_bucket(CAST(0.5 AS DOUBLE), array(0.1, 0.5, 0.9)) AS mid,
@@ -68,7 +69,7 @@ class SqlKernelsSpec extends SparkSpec {
   }
 
   test("pq_encode / pq_lut / pq_adc round-trip through the codebook view") {
-    Catalog.registerAll(spark, sf)
+    registerAll(spark, sf)
     // m=2 subspaces × ksub=2 codes × dsub=2 dims; axis-aligned codewords
     Seq(
       (0, 0, Seq(1f, 0f)), (0, 1, Seq(0f, 1f)),

@@ -103,20 +103,19 @@ class DdlRaceSpec extends SparkSpec {
     } finally VersionedTable.setBackend(prev)
   }
 
-  test("casDeclareSchema semantics: stale expectation refuses; the " +
-      "chain shadows a legacy schema.json") {
+  test("casDeclareSchema semantics: stale expectation refuses; a " +
+      "redeclaration wins; the chain stays bounded") {
     val ops = new VersionedTableOps(TableIO.local)
     val dir = tmpDir("ddlcas") + "/t"
-    // legacy single-file declaration reads through the fallback
-    TableIO.local.mkdirs(s"$dir/manifests")
-    TableIO.local.writeLines(s"$dir/manifests/schema.json", Seq("{\"legacy\":1}"))
-    assert(ops.declaredSchema(dir).contains("{\"legacy\":1}"))
-    // CAS from the legacy state works, then shadows the old file forever
-    ops.casDeclareSchema(dir, Some("{\"legacy\":1}"), "{\"v\":2}")
+    assert(ops.declaredSchema(dir).isEmpty)
+    ops.declareSchema(dir, "{\"v\":1}")
+    assert(ops.declaredSchema(dir).contains("{\"v\":1}"))
+    // CAS from the current declaration lands the next chain entry
+    ops.casDeclareSchema(dir, Some("{\"v\":1}"), "{\"v\":2}")
     assert(ops.declaredSchema(dir).contains("{\"v\":2}"))
     // a CAS whose base moved refuses instead of overwriting
     val e = intercept[java.util.ConcurrentModificationException] {
-      ops.casDeclareSchema(dir, Some("{\"legacy\":1}"), "{\"v\":3}")
+      ops.casDeclareSchema(dir, Some("{\"v\":1}"), "{\"v\":3}")
     }
     assert(e.getMessage.contains("re-run"))
     assert(ops.declaredSchema(dir).contains("{\"v\":2}"))
@@ -235,15 +234,12 @@ class DdlRaceSpec extends SparkSpec {
   test("racing retirements union instead of last-writer-wins") {
     val ops = new VersionedTableOps(TableIO.local)
     val dir = tmpDir("ddlretire") + "/t"
-    // legacy ledger participates in the union
-    TableIO.local.mkdirs(s"$dir/manifests")
-    TableIO.local.writeLines(s"$dir/manifests/retired", Seq("1\tc_old"))
     val threads = (2 to 9).map { i =>
       new Thread(() => ops.retireColumn(dir, i.toLong, s"c$i"))
     }
     threads.foreach(_.start()); threads.foreach(_.join(10000))
     val got = ops.retiredColumns(dir)
-    assert(got == (1L -> "c_old") +: (2 to 9).map(i => i.toLong -> s"c$i"),
+    assert(got == (2 to 9).map(i => i.toLong -> s"c$i"),
       s"every racing retirement must survive: $got")
   }
 }

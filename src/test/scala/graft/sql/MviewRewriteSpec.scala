@@ -61,7 +61,7 @@ class MviewRewriteSpec extends SparkSpec {
     val delta = ops.propsReads.get() - before
     assert(delta == 0,
       s"optimizer re-read table properties $delta times over an " +
-        "unchanged table; the (mtime, size) memo must absorb repeat plans")
+        "unchanged table; the properties memo must absorb repeat plans")
     // view still answers the query after the memoized plans — the memo
     // must not have pinned a stale attachment
     val df = spark.sql(s"SELECT etype, count(*) AS n FROM graft.`$src` " +
